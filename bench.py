@@ -2,7 +2,7 @@
 at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "edges/s", "queries": {...}, "sf": ...}
 
 Headline metric: PageRank superstep throughput (edges processed per
 second per superstep, BASELINE.json) over the transcript fixture tier
@@ -302,7 +302,7 @@ def main() -> None:
             {
                 "metric": "pagerank_edges_per_sec_per_superstep",
                 "value": round(edges_per_sec, 1),
-                "unit": "sec",
+                "unit": "edges/s",
                 "queries": timings,
                 "queries_spread": spread,
                 "sf": sf,

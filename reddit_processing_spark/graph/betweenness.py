@@ -47,9 +47,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.ckpt import CheckpointManager, mix_fingerprint
-from .components import _annotate, symmetrize
-from .partitioning import resolve_partitions
+from ..plans.ckpt import CheckpointManager
+from ..plans.superstep import checkpoint_base
+from .components import symmetrize
+from .partitioning import setup_scan, source_fingerprint
 
 
 def betweenness_estimate(
@@ -68,9 +69,8 @@ def betweenness_estimate(
     estimate on the networkx ``normalized=False`` scale. Vertices with
     zero accumulated dependency are included (bc 0.0) so the output is
     a total function over the vertex set."""
-    import tempfile
-
-    P = resolve_partitions(spark, edges, num_partitions)
+    # one setup scan sizes the loop and fingerprints the raw edges
+    P, fp = setup_scan(spark, edges, num_partitions, sym_factor=1)
     sym = symmetrize(edges).repartition(P, "src").persist(StorageLevel.MEMORY_AND_DISK)
     verts = sym.select(F.col("src").alias("vid")).distinct().persist(
         StorageLevel.MEMORY_AND_DISK
@@ -83,23 +83,11 @@ def betweenness_estimate(
         seeds = sources.select(F.col("vid").cast("long").alias("vid")).distinct()
         k_eff = seeds.count()
 
-    erow = sym.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    srow = seeds.agg(
-        F.coalesce(F.bit_xor(F.xxhash64("vid")), F.lit(0)).alias("h"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    fp = mix_fingerprint(int(erow["n"]), int(erow["h"]) ^ int(srow["h"]) ^ int(srow["n"]))
-    ckpt_f = CheckpointManager(
-        (ckpt_dir or tempfile.mkdtemp(prefix="bc_ckpt_")) + "/fwd",
-        "betweenness_fwd", fingerprint=fp,
-    )
-    ckpt_b = CheckpointManager(
-        (ckpt_dir or tempfile.mkdtemp(prefix="bc_ckpt_")) + "/bwd",
-        "betweenness_bwd", fingerprint=fp,
-    )
+    # one directory per call, the two phases in subdirectories
+    base = checkpoint_base(ckpt_dir, "betweenness")
+    fp = source_fingerprint(fp, seeds)
+    ckpt_f = CheckpointManager(base + "/fwd", "betweenness_fwd", fingerprint=fp)
+    ckpt_b = CheckpointManager(base + "/bwd", "betweenness_bwd", fingerprint=fp)
 
     # ---- phase 1: level BFS with shortest-path counting ----
     state = seeds.select(
@@ -123,11 +111,15 @@ def betweenness_estimate(
         )
         obs = Observation(f"bc_fwd_{d + 1}")
         observed = state.unionByName(news.observe(obs, F.count("*").alias("new")))
-        state = ckpt_f.write(observed, d + 1)
-        n_new = int(obs.get["new"] or 0)
-        _annotate(ckpt_f, d + 1, {"changed": n_new, "msg_rows": n_new},
-                  int((time.monotonic() - t0) * 1000))
-        if n_new == 0:
+        def n_new() -> int:
+            return int(obs.get["new"] or 0)
+
+        state = ckpt_f.write(
+            observed, d + 1,
+            lambda written, rows: {"changed": n_new(), "msg_rows": n_new()},
+            t0=t0,
+        )
+        if n_new() == 0:
             depth = d
             break
         depth = d + 1
@@ -163,9 +155,11 @@ def betweenness_estimate(
         observed = delta.filter(F.col("dist") != d).unionByName(
             updated.observe(obs, F.count("*").alias("rows"))
         )
-        delta = ckpt_b.write(observed, i + 1)
-        _annotate(ckpt_b, i + 1, {"changed": int(obs.get["rows"] or 0), "msg_rows": 0},
-                  int((time.monotonic() - t0) * 1000))
+        delta = ckpt_b.write(
+            observed, i + 1,
+            lambda written, rows: {"changed": int(obs.get["rows"] or 0), "msg_rows": 0},
+            t0=t0,
+        )
 
     acc = (
         delta.filter(F.col("vid") != F.col("s"))

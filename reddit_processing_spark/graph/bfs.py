@@ -9,11 +9,15 @@ bit-identical at any parallelism, and only vertices whose distance
 improved last superstep broadcast this superstep (frontier-delta:
 message volume tracks the expanding rim, not |E|).
 
-Unreached vertices carry the INF sentinel (2^62) through the
-iteration — an integer min over a union needs a total order, and a
-null distance would need an outer-join branch instead (SURVEY §4.3:
-union + groupBy beats outer join for monotone states). The public
-result filters the sentinel out and returns only reached vertices.
+BFS is SSSP with unit step cost: both public functions run one
+relaxation, :func:`_relax`, whose step cost is ``1`` (integer hop
+counts) or the edge weight ``w`` (Bellman-Ford as frontier
+iteration). Unreached vertices carry the INF sentinel (2^62 for BFS,
+``inf`` for SSSP) through the iteration — a min over a union needs a
+total order, and a null distance would need an outer-join branch
+instead (SURVEY §4.3: union + groupBy beats outer join for monotone
+states). The public result filters the sentinel out and returns only
+reached vertices.
 
 Scale: the (symmetrized) edge table is shuffled once at setup and
 persisted hash-partitioned by ``src``; each superstep shuffles only
@@ -24,15 +28,15 @@ diameter, the same envelope as hash-min CC.
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.ckpt import CheckpointManager, mix_fingerprint
-from .components import _annotate, _resume_state, symmetrize
-from .partitioning import clamp_partitions
+from ..plans.ckpt import count_hash, mix_fingerprint
+from ..plans.superstep import run_supersteps
+from .components import symmetrize
+from .pagerank import _vertices_from_edges
+from .partitioning import clamp_partitions, source_fingerprint
 
 INF = 1 << 62
 STATE_COLS = {"vid", "dist", "chg"}
@@ -53,154 +57,15 @@ def bfs_distances(
     reachable vertex; returns (vid, dist) with dist = 0 for sources.
     ``directed=True`` follows edges src→dst only.
 
-    ``ckpt_every`` (superstep fusion, same contract as
-    ``kcore.core_numbers``): compose that many BFS rounds into ONE
-    Spark job and checkpoint only the last. Sound because the round is
-    a deterministic monotone min (fused ≡ unfused asserted in tests)
-    and a converged inner round is idempotent (empty frontier ⇒ no
-    messages ⇒ distances unchanged), so block-granular convergence
-    checks risk at most ``ckpt_every − 1`` free no-op rounds. Step
-    indices stay cumulative ROUND counts, so manifests and resume
-    budgets are cadence-comparable. BFS/SSSP are extension algorithms
-    — the north rule's per-superstep checkpoint contract binds the
-    four core algorithms (PageRank/CC/LPA/triangles, cadence 1); here
-    the knob trades resume granularity for the per-job floor, which
+    ``ckpt_every`` fuses that many rounds into one checkpointed job
+    (``plans/superstep.py``): sound because the round is a monotone min
+    whose converged rounds are no-ops (fused ≡ unfused asserted in
+    tests). It trades resume granularity for the per-job floor, which
     dominates once the frontier rim shrinks below cluster width."""
-    import tempfile
-
-    if ckpt_every < 1:
-        raise ValueError(f"ckpt_every must be >= 1, got {ckpt_every}")
-
-    # ONE full-input scan before superstep 1 (round-4 VERDICT: the
-    # partition-sizing count, the edge fingerprint, and the persist
-    # warm-up each scanned the edge table as separate setup jobs —
-    # +51% on the bench leg). The fingerprint aggregate over the RAW
-    # input computes the row count the partition sizing needs, so the
-    # sizing is free; the symmetrize + repartition materialize lazily
-    # inside superstep 1's first job against the persisted ``e``.
-    raw = edges.select("src", "dst")
-    erow = raw.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    P = clamp_partitions(
-        spark, int(erow["n"]) * (1 if directed else 2), num_partitions
+    return _relax(
+        spark, edges, sources, None, max_iter, ckpt_dir, num_partitions,
+        directed, resume, ckpt_every,
     )
-    e = (raw if directed else symmetrize(edges)).repartition(P, "src").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
-    verts = (
-        e.select(F.col("src").alias("vid"))
-        .unionByName(e.select(F.col("dst").alias("vid")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    # The checkpoint identity is (edge set, SOURCE set): distances are a
-    # function of both, so a resume against state written for a
-    # different source set must be rejected exactly like a different
-    # graph would be (round-3 ADVICE — the edge-only fingerprint let a
-    # changed source set silently resume the old run's distances).
-    # The source aggregate is the one remaining setup job — over the
-    # (persisted) source set, not the edge table.
-    src_tag = (
-        sources.select(F.col("vid").cast("long").alias("vid"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    srow = src_tag.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("vid")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    fp = mix_fingerprint(
-        int(erow["n"]), int(erow["h"]) ^ int(srow["h"]) ^ int(srow["n"])
-    )
-
-    ckpt = CheckpointManager(
-        ckpt_dir or tempfile.mkdtemp(prefix="bfs_ckpt_"), "bfs", fingerprint=fp
-    )
-    state = (
-        verts.join(src_tag.withColumn("_is_src", F.lit(True)), "vid", "left")
-        .select(
-            "vid",
-            F.when(F.col("_is_src"), F.lit(0)).otherwise(F.lit(INF)).alias("dist"),
-            F.coalesce(F.col("_is_src"), F.lit(False)).alias("chg"),
-        )
-    )
-    start_step = 0
-    if resume:
-        resumed, last = _resume_state(ckpt, spark, STATE_COLS)
-        if resumed is not None:
-            state, start_step = resumed, last
-
-    def _round(state: DataFrame) -> DataFrame:
-        """One BFS relaxation as a plan transform — chainable without
-        materialization (superstep fusion)."""
-        frontier = state.where(F.col("chg")).select("vid", "dist")
-        msgs = (
-            e.join(frontier.hint("SHUFFLE_HASH"), e.src == frontier.vid)
-            .select(F.col("dst").alias("vid"), (F.col("dist") + 1).alias("dist"))
-        )
-        merged = (
-            state.select("vid", "dist")
-            .unionByName(msgs)
-            .groupBy("vid")
-            .agg(F.min("dist").alias("ndist"))
-        )
-        old = state.select("vid", F.col("dist").alias("odist"))
-        return merged.join(old.hint("SHUFFLE_HASH"), "vid").select(
-            "vid",
-            F.col("ndist").alias("dist"),
-            # a vid absent from the resumed state cannot occur (state
-            # spans all vertices), but coalesce guards the flag anyway
-            # (round-2 ADVICE on frontier null-chg drops)
-            F.coalesce(F.col("ndist") < F.col("odist"), F.lit(True)).alias("chg"),
-        )
-
-    rounds = start_step
-    while rounds < max_iter:
-        t0 = time.monotonic()
-        block = min(ckpt_every, max_iter - rounds)
-        for i in range(block):
-            state = _round(state)
-            if i < block - 1:
-                # truncate lineage between fused rounds WITHOUT a job:
-                # each round references state three times (frontier,
-                # union, old-dist join), so an unmaterialized k-round
-                # chain is ~3^k logical-plan copies and Catalyst
-                # compile time dominates (measured 78 s vs 6 s for 10
-                # rounds at the small tier). A lazy localCheckpoint
-                # plants an RDD leaf per round — constant compile cost
-                # — and materializes inside the block's single action.
-                # Reliability trade-off (lineage is discarded, cached
-                # blocks are not fault-tolerant) is bounded by the
-                # parquet checkpoint at block end: a lost executor
-                # costs at most one block, same as any resume.
-                state = state.localCheckpoint(eager=False)
-        obs = Observation(f"bfs_step_{rounds + block}")
-        observed = state.observe(
-            obs, F.sum(F.col("chg").cast("long")).alias("changed")
-        )
-        # step index = cumulative ROUND count (cadence-comparable
-        # manifests; resume restarts at the right round budget)
-        written = ckpt.write(observed, rounds + block)
-        changed = int(obs.get["changed"] or 0)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        _annotate(
-            ckpt, rounds + block,
-            {"changed": changed, "rounds_in_block": block}, wall_ms,
-        )
-        state = written
-        rounds += block
-        if changed == 0:
-            break
-
-    out = state.where(F.col("dist") < INF).select("vid", "dist")
-    e.unpersist()
-    verts.unpersist()
-    src_tag.unpersist()
-    return out
 
 
 def shortest_paths(
@@ -222,100 +87,77 @@ def shortest_paths(
     parallel (src, dst) edges collapse to their min weight; undirected
     mode symmetrizes keeping the per-direction min.
 
-    Same engine shape as BFS: monotone float min over
-    [state ∪ frontier messages] (union + groupBy, INF sentinel, no
-    outer-join branch), frontier = vertices whose distance improved
-    last superstep. Converges in ≤ |V| supersteps (non-negative
-    weights), in practice O(weighted-diameter / min-weight hops).
-    Float determinism: each candidate distance is the weight sum
-    along ONE path (accumulated in path order), and min over
-    candidates is exact — results are bit-identical at any
-    parallelism, asserted in tests with a networkx Dijkstra oracle.
-    ``ckpt_every`` fuses that many relaxation rounds into one job
-    (same soundness argument and manifest contract as
-    :func:`bfs_distances`)."""
-    import tempfile
+    Converges in ≤ |V| supersteps (non-negative weights), in practice
+    O(weighted-diameter / min-weight hops). Float determinism: each
+    candidate distance is the weight sum along ONE path (accumulated
+    in path order), and min over candidates is exact — results are
+    bit-identical at any parallelism, asserted in tests with a
+    networkx Dijkstra oracle. ``ckpt_every`` as in
+    :func:`bfs_distances`."""
+    return _relax(
+        spark, edges, sources, weight_col, max_iter, ckpt_dir, num_partitions,
+        directed, resume, ckpt_every,
+    )
 
-    if ckpt_every < 1:
-        raise ValueError(f"ckpt_every must be >= 1, got {ckpt_every}")
 
-    # Same single-setup-scan shape as bfs_distances: ONE aggregate over
-    # the raw input yields fingerprint, partition sizing, and the
-    # negative-weight check; the canonicalizing groupBy + repartition
-    # materialize lazily under the persist inside superstep 1. (The
-    # fingerprint therefore identifies the RAW weighted input, which
-    # is a superset-strict identity of the canonical edge set — a
-    # false mismatch only forces a harmless restart.)
-    raw = edges.select("src", "dst", F.col(weight_col).cast("double").alias("w"))
-    erow = raw.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst", "w")), F.lit(0)).alias("h"),
-        F.min("w").alias("minw"),
-    ).collect()[0]
-    if erow["minw"] is not None and float(erow["minw"]) < 0:
+def _relax(
+    spark: SparkSession,
+    edges: DataFrame,
+    sources: DataFrame,
+    weight_col: str | None,
+    max_iter: int,
+    ckpt_dir: str | None,
+    num_partitions: int | None,
+    directed: bool,
+    resume: bool,
+    ckpt_every: int,
+) -> DataFrame:
+    """Frontier relaxation with step cost 1 (``weight_col`` None: BFS,
+    integer ``dist``, checkpoint algo ``bfs``) or the edge weight
+    (SSSP, double ``dist``, algo ``sssp``)."""
+    bfs = weight_col is None
+    cols = ["src", "dst"] if bfs else ["src", "dst", F.col(weight_col).cast("double").alias("w")]
+    raw = edges.select(*cols)
+    # one setup scan, as ``partitioning.setup_scan`` (plus, for SSSP,
+    # the negative-weight check); the canonical edges materialize
+    # inside superstep 1
+    erow = count_hash(raw, tuple(raw.columns), *([] if bfs else [F.min("w").alias("minw")]))
+    if not bfs and erow["minw"] is not None and float(erow["minw"]) < 0:
         raise ValueError(
             f"shortest_paths requires non-negative weights (min={erow['minw']})"
         )
     P = clamp_partitions(
         spark, int(erow["n"]) * (1 if directed else 2), num_partitions
     )
-    fwd = raw
-    if not directed:
-        fwd = fwd.unionByName(
+    if bfs:
+        e = raw if directed else symmetrize(edges)
+        cost, zero, inf = F.lit(1), F.lit(0), INF
+    else:
+        fwd = raw if directed else raw.unionByName(
             raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
         )
-    e = (
-        fwd.filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-        .repartition(P, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
+        e = fwd.filter(F.col("src") != F.col("dst")).groupBy("src", "dst").agg(
+            F.min("w").alias("w")
+        )
+        cost, zero, inf = F.col("w"), F.lit(0.0), float("inf")
+    e = e.repartition(P, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    verts = _vertices_from_edges(e).persist(StorageLevel.MEMORY_AND_DISK)
+    # identity = (edge set, SOURCE set); the source aggregate is the
+    # one remaining setup job — over the (persisted) source set.
     src_tag = (
         sources.select(F.col("vid").cast("long").alias("vid"))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    srow = src_tag.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("vid")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    fp = mix_fingerprint(
-        int(erow["n"]), int(erow["h"]) ^ int(srow["h"]) ^ int(srow["n"])
-    )
-    ckpt = CheckpointManager(
-        ckpt_dir or tempfile.mkdtemp(prefix="sssp_ckpt_"), "sssp", fingerprint=fp
-    )
+    fp = source_fingerprint(mix_fingerprint(int(erow["n"]), int(erow["h"])), src_tag)
 
-    verts = (
-        e.select(F.col("src").alias("vid"))
-        .unionByName(e.select(F.col("dst").alias("vid")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    inf = float("inf")
-    state = (
-        verts.join(src_tag.withColumn("_is_src", F.lit(True)), "vid", "left")
-        .select(
-            "vid",
-            F.when(F.col("_is_src"), F.lit(0.0)).otherwise(F.lit(inf)).alias("dist"),
-            F.coalesce(F.col("_is_src"), F.lit(False)).alias("chg"),
-        )
-    )
-    start_step = 0
-    if resume:
-        resumed, last = _resume_state(ckpt, spark, STATE_COLS)
-        if resumed is not None:
-            state, start_step = resumed, last
-
-    def _round(state: DataFrame) -> DataFrame:
-        """One Bellman-Ford relaxation as a plan transform — chainable
-        without materialization (superstep fusion, see bfs_distances)."""
+    def step(state: DataFrame, prev: dict, observe) -> DataFrame:
+        """One relaxation as a plan transform — chainable without
+        materialization (superstep fusion)."""
         frontier = state.where(F.col("chg")).select("vid", "dist")
         msgs = (
             e.join(frontier.hint("SHUFFLE_HASH"), e.src == frontier.vid)
-            .select(F.col("dst").alias("vid"), (F.col("dist") + F.col("w")).alias("dist"))
+            .select(F.col("dst").alias("vid"), (F.col("dist") + cost).alias("dist"))
         )
         merged = (
             state.select("vid", "dist")
@@ -327,39 +169,29 @@ def shortest_paths(
         return merged.join(old.hint("SHUFFLE_HASH"), "vid").select(
             "vid",
             F.col("ndist").alias("dist"),
+            # a vid absent from the resumed state cannot occur (state
+            # spans all vertices), but coalesce guards the flag anyway
+            # (round-2 ADVICE on frontier null-chg drops)
             F.coalesce(F.col("ndist") < F.col("odist"), F.lit(True)).alias("chg"),
         )
 
-    rounds = start_step
-    while rounds < max_iter:
-        t0 = time.monotonic()
-        block = min(ckpt_every, max_iter - rounds)
-        for i in range(block):
-            state = _round(state)
-            if i < block - 1:
-                # lineage truncation between fused rounds — see
-                # bfs_distances for the 3^k plan-blowup rationale
-                state = state.localCheckpoint(eager=False)
-        obs = Observation(f"sssp_step_{rounds + block}")
-        observed = state.observe(
-            obs, F.sum(F.col("chg").cast("long")).alias("changed")
+    try:
+        run = run_supersteps(
+            ckpt_dir, "bfs" if bfs else "sssp", fp, STATE_COLS,
+            verts.join(src_tag.withColumn("_is_src", F.lit(True)), "vid", "left").select(
+                "vid",
+                F.when(F.col("_is_src"), zero).otherwise(F.lit(inf)).alias("dist"),
+                F.coalesce(F.col("_is_src"), F.lit(False)).alias("chg"),
+            ),
+            step,
+            lambda m, _: m["changed"] == 0,
+            max_iter,
+            metrics={"changed": F.sum(F.col("chg").cast("long"))},
+            every=ckpt_every,
+            resume=resume,
         )
-        written = ckpt.write(observed, rounds + block)
-        changed = int(obs.get["changed"] or 0)
-        _annotate(
-            ckpt, rounds + block,
-            {"changed": changed, "rounds_in_block": block},
-            int((time.monotonic() - t0) * 1000),
-        )
-        state = written
-        rounds += block
-        if changed == 0:
-            break
-
-    out = state.where(F.col("dist") != F.lit(inf)).select("vid", "dist")
-    e.unpersist()
-    verts.unpersist()
-    src_tag.unpersist()
-    return out
-
-
+    finally:
+        e.unpersist()
+        verts.unpersist()
+        src_tag.unpersist()
+    return run.state.where(F.col("dist") < F.lit(inf)).select("vid", "dist")

@@ -28,15 +28,13 @@ seeds only):
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.ckpt import CheckpointManager, mix_fingerprint
-from .components import _annotate, _resume_state, symmetrize
-from .partitioning import resolve_partitions
+from ..plans.superstep import run_supersteps
+from .components import symmetrize
+from .partitioning import setup_scan, source_fingerprint
 
 STATE_COLS = {"vid", "s", "dist", "chg"}
 
@@ -57,59 +55,22 @@ def bfs_per_source(
     simply absent (state only ever holds reached rows — no INF
     sentinel needed, unlike the folded bfs_distances).
 
-    ``ckpt_every`` fuses that many rounds into one checkpointed job —
-    same soundness argument and manifest contract as
-    :func:`~..graph.bfs.bfs_distances` (monotone min, converged inner
-    rounds are no-ops, step indices stay cumulative round counts),
-    with the same lazy-localCheckpoint lineage truncation between
-    inner rounds (SURVEY §4.3 fused-lineage rule)."""
-    import tempfile
-
-    if ckpt_every < 1:
-        raise ValueError(f"ckpt_every must be >= 1, got {ckpt_every}")
-
-    P = resolve_partitions(spark, edges, num_partitions)
+    ``ckpt_every`` fuses rounds as in
+    :func:`~..graph.bfs.bfs_distances`."""
+    # one setup scan sizes the loop and fingerprints the raw edges;
+    # the symmetrized persist materializes inside round 1
+    P, fp = setup_scan(spark, edges, num_partitions, sym_factor=1)
     sym = symmetrize(edges).repartition(P, "src").persist(StorageLevel.MEMORY_AND_DISK)
-
-    erow = sym.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-    ).collect()[0]
     src_tag = sources.select(F.col("vid").cast("long").alias("vid")).distinct()
-    srow = src_tag.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("vid")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    # identity = (edge set, source set), same rule as bfs_distances
-    fp = mix_fingerprint(
-        int(erow["n"]), int(erow["h"]) ^ int(srow["h"]) ^ int(srow["n"])
-    )
-    ckpt = CheckpointManager(
-        ckpt_dir or tempfile.mkdtemp(prefix="bfsps_ckpt_"), "bfs_per_source",
-        fingerprint=fp,
-    )
 
-    state = src_tag.select(
-        "vid",
-        F.col("vid").alias("s"),
-        F.lit(0).cast("long").alias("dist"),
-        F.lit(True).alias("chg"),
-    )
-    start = 0
-    if resume:
-        resumed, last = _resume_state(ckpt, spark, STATE_COLS)
-        if resumed is not None:
-            state, start = resumed, last
-
-    def _round(state: DataFrame, obs_m: Observation | None) -> DataFrame:
+    def step(state: DataFrame, prev: dict, observe) -> DataFrame:
         """One (vid, source)-keyed BFS round as a plan transform —
         chainable without materialization (superstep fusion)."""
         frontier = state.filter("chg").select("vid", "s", "dist")
         msgs = sym.join(frontier.hint("SHUFFLE_HASH"), sym.src == frontier.vid).select(
             sym.dst.alias("vid"), "s", (F.col("dist") + 1).alias("dist")
         )
-        if obs_m is not None:
-            msgs = msgs.observe(obs_m, F.count("*").alias("msg_rows"))
+        msgs = observe(msgs, msg_rows=F.count("*"))
         # min(odist) trick from CC: only the unioned self-rows carry
         # odist, so a NULL min(odist) means (vid, s) was just reached
         return (
@@ -125,43 +86,26 @@ def bfs_per_source(
             )
         )
 
-    changed = 1
-    rounds = start
-    while rounds < max_iter:
-        t0 = time.monotonic()
-        block = min(ckpt_every, max_iter - rounds)
-        obs_m = Observation(f"bfsps_msgs_{rounds + block}")
-        for i in range(block):
-            # message metrics ride the LAST fused round
-            state = _round(state, obs_m if i == block - 1 else None)
-            if i < block - 1:
-                # lineage truncation between fused rounds — see
-                # bfs_distances / SURVEY §4.3 (s^k plan blowup)
-                state = state.localCheckpoint(eager=False)
-        obs = Observation(f"bfsps_step_{rounds + block}")
-        observed = state.observe(obs, F.sum(F.col("chg").cast("long")).alias("changed"))
-        written = ckpt.write(observed, rounds + block)
-        changed = int(obs.get["changed"] or 0)
-        # AQE empty-relation propagation can prune the CollectMetrics
-        # node obs_m rides when the block overshot convergence (empty
-        # frontier ⇒ empty message stream) — which happens exactly
-        # when 0 is the true value (same contract as kcore).
-        try:
-            msg_rows = int(obs_m.get["msg_rows"] or 0)
-        except Exception:
-            msg_rows = 0
-        _annotate(
-            ckpt, rounds + block,
-            {"changed": changed, "msg_rows": msg_rows,
-             "rounds_in_block": block},
-            int((time.monotonic() - t0) * 1000),
+    try:
+        # identity = (edge set, source set), same rule as bfs_distances
+        run = run_supersteps(
+            ckpt_dir, "bfs_per_source", source_fingerprint(fp, src_tag), STATE_COLS,
+            src_tag.select(
+                "vid",
+                F.col("vid").alias("s"),
+                F.lit(0).cast("long").alias("dist"),
+                F.lit(True).alias("chg"),
+            ),
+            step,
+            lambda m, _: m["changed"] == 0,
+            max_iter,
+            metrics={"changed": F.sum(F.col("chg").cast("long"))},
+            every=ckpt_every,
+            resume=resume,
         )
-        state = written
-        rounds += block
-        if changed == 0:
-            break
-    sym.unpersist()
-    return state.select("vid", "s", "dist")
+    finally:
+        sym.unpersist()
+    return run.state.select("vid", "s", "dist")
 
 
 def closeness_estimate(

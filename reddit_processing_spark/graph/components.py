@@ -33,12 +33,15 @@ frontier messages plus the (vid, comp) state.
 from __future__ import annotations
 
 import time
+import warnings
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.ckpt import CheckpointManager
+from ..plans.ckpt import CheckpointManager, count_hash
+from ..plans.superstep import checkpoint_base, run_supersteps
+from .pagerank import _vertices_from_edges
 from .partitioning import resolve_partitions, setup_scan
 
 STATE_COLS = {"vid", "comp", "chg"}
@@ -50,28 +53,6 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     fwd = edges.select("src", "dst")
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return fwd.unionByName(rev).filter(F.col("src") != F.col("dst")).distinct()
-
-
-def _resume_state(ckpt: CheckpointManager, spark: SparkSession, required: set[str]):
-    """(state, step) from the newest valid checkpoint whose schema
-    matches ``required``; (None, 0) otherwise. An old-format
-    checkpoint (pre-frontier, no ``chg`` column) is ignored with a
-    warning instead of crashing with an unresolved-column error."""
-    last = ckpt.latest_valid_step()
-    if last is None:
-        return None, 0
-    state = ckpt.read(spark, last)
-    if set(state.columns) != required:
-        import warnings
-
-        warnings.warn(
-            f"{ckpt.algo}: checkpoint at step {last} has columns "
-            f"{sorted(state.columns)} (expected {sorted(required)}); "
-            "ignoring it and restarting from superstep 0",
-            stacklevel=3,
-        )
-        return None, 0
-    return state, last
 
 
 def connected_components(
@@ -106,41 +87,21 @@ def connected_components(
     rewriting, O(log²) rounds, identical output — cross-checked in
     tests); hash-min remains the contract implementation
     (BASELINE.json names it) and the reference oracle."""
-    import tempfile
-
-    # single setup scan (round-4 VERDICT #1 pattern): partition sizing
-    # + the resume fingerprint (round-2 ADVICE: a stale ckpt_dir from a
-    # DIFFERENT edge set must be rejected) from one aggregate over the
-    # raw input; symmetrize + repartition materialize lazily under the
-    # persist inside superstep 1.
+    # one setup scan sizes the loop and fingerprints the raw edges;
+    # the symmetrized persist materializes inside superstep 1
     P, fp = setup_scan(spark, edges, num_partitions)
     salt = max(1, salt)
-    ckpt = CheckpointManager(
-        ckpt_dir or tempfile.mkdtemp(prefix="cc_ckpt_"), "components",
-        fingerprint=fp,
-    )
 
     sym = symmetrize(edges).repartition(P, "src").persist(StorageLevel.MEMORY_AND_DISK)
     vertices = sym.select(F.col("src").alias("vid")).distinct().persist(StorageLevel.MEMORY_AND_DISK)
     # (sym carries both directions, so src alone covers every endpoint)
 
-    start = 0
-    comps = vertices.select(
-        "vid", F.col("vid").alias("comp"), F.lit(True).alias("chg")
-    )
-    if resume:
-        state, start = _resume_state(ckpt, spark, STATE_COLS)
-        if state is not None:
-            comps = state
-
-    for step in range(start, max_iter):
-        t0 = time.monotonic()
+    def step(comps: DataFrame, prev: dict, observe) -> DataFrame:
         active = comps.filter("chg") if frontier else comps
         msgs = sym.join(active, sym.src == active.vid).select(
             sym.dst.alias("vid"), "comp"
         )
-        obs_m = Observation(f"cc_msgs_{step + 1}")
-        msgs = msgs.observe(obs_m, F.count("*").alias("msg_rows"))
+        msgs = observe(msgs, msg_rows=F.count("*"))
         if salt > 1:
             # partial min keyed by (vid, salt-of-comp) caps any single
             # reduce key's fan-in; final min restores exactness.
@@ -179,42 +140,26 @@ def connected_components(
         # when resuming foreign/partial state) has ocomp NULL — it must
         # ENTER the frontier, not silently drop out of it forever
         # (round-2 ADVICE; dense mode self-heals, frontier must too).
-        new = new.select(
+        return new.select(
             "vid",
             "comp",
             F.coalesce(F.col("comp") != F.col("ocomp"), F.lit(True)).alias("chg"),
         )
-        obs = Observation(f"cc_step_{step + 1}")
-        observed = new.observe(obs, F.sum(F.col("chg").cast("long")).alias("changed"))
-        written = ckpt.write(observed, step + 1)
-        changed = int(obs.get["changed"] or 0)
-        msg_rows = int(obs_m.get["msg_rows"] or 0)
-        _annotate(
-            ckpt, step + 1, {"changed": changed, "msg_rows": msg_rows},
-            int((time.monotonic() - t0) * 1000),
+
+    try:
+        run = run_supersteps(
+            ckpt_dir, "components", fp, STATE_COLS,
+            vertices.select("vid", F.col("vid").alias("comp"), F.lit(True).alias("chg")),
+            step,
+            lambda m, _: m["changed"] == 0,
+            max_iter,
+            metrics={"changed": F.sum(F.col("chg").cast("long"))},
+            resume=resume,
         )
-        comps = written
-        if changed == 0:
-            break
-
-    sym.unpersist()
-    vertices.unpersist()
-    return comps.select("vid", "comp")
-
-
-def _annotate(ckpt: CheckpointManager, step: int, metrics: dict, wall_ms: int) -> None:
-    import json
-    import os
-
-    p = ckpt.manifest_path(step)
-    with open(p) as fh:
-        m = json.load(fh)
-    m["metrics"] = metrics
-    m["wall_ms"] = wall_ms
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(m, fh)
-    os.rename(tmp, p)
+    finally:
+        sym.unpersist()
+        vertices.unpersist()
+    return run.state.select("vid", "comp")
 
 
 def connected_components_star(
@@ -246,19 +191,10 @@ def connected_components_star(
     Every round's edge list is checkpointed (lineage truncation +
     resume point), same manifest scheme as the iterative algorithms.
     """
-    import tempfile
-
     P = resolve_partitions(spark, edges, num_partitions)
-    ckpt = CheckpointManager(
-        ckpt_dir or tempfile.mkdtemp(prefix="ccstar_ckpt_"), "cc_star"
-    )
+    ckpt = CheckpointManager(checkpoint_base(ckpt_dir, "cc_star"), "cc_star")
 
-    vertices = (
-        edges.select(F.col("src").alias("vid"))
-        .unionByName(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    vertices = _vertices_from_edges(edges).persist(StorageLevel.MEMORY_AND_DISK)
 
     # canonical starting orientation: (u, v) with u > v, deduped
     e = (
@@ -270,16 +206,15 @@ def connected_components_star(
         .repartition(P, "u")
     )
 
-    def _signature(df: DataFrame):
+    sigs: list[dict] = []
+
+    def _signature(df: DataFrame, rows: int) -> dict:
         # bit_xor: order-insensitive and overflow-free under ANSI mode
         # (rows are distinct, so xor cancellation can't collide states)
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
+        row = count_hash(df, ("u", "v"))
+        sigs.append({"edges": int(row["n"]), "sig": int(row["h"])})
+        return sigs[-1]
 
-    prev_sig = None
     converged = False
     for rnd in range(max_rounds):
         t0 = time.monotonic()
@@ -314,24 +249,15 @@ def connected_components_star(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        written = ckpt.write(ss, rnd + 1)
-        sig = _signature(written)
-        _annotate(
-            ckpt, rnd + 1, {"edges": sig[0], "sig": sig[1]},
-            int((time.monotonic() - t0) * 1000),
-        )
-        e = written
-        if sig == prev_sig:
+        e = ckpt.write(ss, rnd + 1, _signature, t0=t0)
+        if len(sigs) > 1 and sigs[-1] == sigs[-2]:
             converged = True
             break
-        prev_sig = sig
 
     if not converged:
         # exhausting max_rounds mid-rewrite yields per-vertex LOCAL
         # minima below, not component minima — plausible-looking but
         # WRONG labels with no signal (round-2 ADVICE). Surface it.
-        import warnings
-
         warnings.warn(
             f"connected_components_star: edge signature did not "
             f"stabilize within max_rounds={max_rounds}; the returned "

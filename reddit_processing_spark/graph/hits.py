@@ -18,13 +18,12 @@ exchanges are only the two |V|-row state shuffles into the joins
 (SHUFFLE_HASH-hinted: the persisted edge sides never re-shuffle) and
 the two message groupBys. The state is stored RAW: the expensive
 superstep lineage runs exactly once (inside the checkpoint write),
-and the L1 norm scalars are then read back by a tiny deterministic
-aggregate over the written |V|-row parquet, becoming literal divisors
-in the NEXT superstep's plan — the Katz pattern, minus the old
-full-lineage normalization job. (The scalars deliberately do NOT come
-from the write's Observation: CollectMetrics merges in task-completion
-order, maximizing ULP wobble.) The convergence delta is observed one
-superstep late — at most one extra superstep past tol.
+and the L1 norm scalars are then read back by a tiny aggregate over
+the written |V|-row parquet, committed with the step's manifest, and
+become literal divisors in the NEXT superstep's plan — the Katz
+pattern, minus the old full-lineage normalization job. The
+convergence delta is observed one superstep late — at most one extra
+superstep past tol.
 
 Determinism contract: resume is equivalent to an uninterrupted run
 within float associativity (a few ULP per component, tested at
@@ -40,18 +39,17 @@ a different edge set (same guard as PageRank/CC)."""
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.ckpt import CheckpointManager, mix_fingerprint
+from ..plans.ckpt import count_hash, mix_fingerprint
+from ..plans.superstep import run_supersteps
 from .partitioning import resolve_partitions
-from .pagerank import _vertices_from_edges
+from .pagerank import Prepared, _vertices_from_edges
 
 
-class HITS:
+class HITS(Prepared):
     """Prepared HITS over an aggregated (src, dst, w) edge table."""
 
     def __init__(
@@ -60,30 +58,17 @@ class HITS:
         edges: DataFrame,
         num_partitions: int | None = None,
     ):
-        self.spark = spark
-
-        self._own_edges = not (
-            edges.storageLevel.useMemory or edges.storageLevel.useDisk
-        )
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK) if self._own_edges else edges
-        self._edges_in = edges
-        # after the persist, so the sizing count warms the cache
-        # instead of recomputing unpersisted lineage twice
-        self.P = resolve_partitions(spark, edges, num_partitions)
-
-        self.vertices = _vertices_from_edges(edges).persist(StorageLevel.MEMORY_AND_DISK)
+        super().__init__(spark, edges)
+        # sized after the input cache, so the sizing count warms it
+        self.P = resolve_partitions(spark, self.edges, num_partitions)
+        self.vertices = self._cache(_vertices_from_edges(self.edges))
         # two persisted copies, each partitioned by the key its
         # superstep join consumes — state sides shuffle, edges never do.
-        e = edges.select("src", "dst", F.col("w").cast("double").alias("w"))
-        self.e_src = e.repartition(self.P, "src").persist(StorageLevel.MEMORY_AND_DISK)
-        self.e_dst = e.repartition(self.P, "dst").persist(StorageLevel.MEMORY_AND_DISK)
-
-        vrow = self.vertices.agg(F.count("*").alias("v")).collect()[0]
-        self.V = int(vrow["v"])
-        erow = self.e_src.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("src", "dst", "w")), F.lit(0)).alias("h"),
-        ).collect()[0]
+        e = self.edges.select("src", "dst", F.col("w").cast("double").alias("w"))
+        self.e_src = self._cache(e.repartition(self.P, "src"))
+        self.e_dst = self._cache(e.repartition(self.P, "dst"))
+        self.V = self.vertices.count()
+        erow = count_hash(self.e_src, ("src", "dst", "w"))
         self.E = int(erow["n"])
         self.fingerprint = mix_fingerprint(self.E, erow["h"])
 
@@ -96,77 +81,16 @@ class HITS:
     ) -> DataFrame:
         """Iterate to convergence; returns (vid, hub, auth), each
         column L1-normalized to sum 1."""
-        import tempfile
-
-        ckpt = CheckpointManager(
-            ckpt_dir or tempfile.mkdtemp(prefix="hits_ckpt_"),
-            "hits",
-            fingerprint=self.fingerprint,
-        )
         if self.V == 0:
             return self.spark.createDataFrame([], "vid long, hub double, auth double")
 
-        # Katz-shaped superstep (round-4 VERDICT #5): the checkpoint
-        # stores RAW (unnormalized) hub/auth plus the previous step's
-        # NORMALIZED hub; the L1 norm scalars (sh, sa) ride the write
-        # job's Observation into the manifest instead of costing a
-        # dedicated |V|-row aggregate job per superstep. Normalization
-        # is applied as literal divisions when the next superstep's
-        # plan is built (bit-identical arithmetic to the old eager
-        # divide — same h_raw/lit(sh) expression, one step later), and
-        # the convergence delta Σ|hub_n(t) − hub_n(t−1)| is therefore
-        # observed one superstep LATE: the loop runs at most one extra
-        # superstep past convergence, in exchange for halving the job
-        # count of every superstep.
-        start_step = 0
-        # virtual step-0 state: hub uniform (already L1-normalized →
-        # sh=1), auth 0 (sa=1 is a never-used divisor), prev_hub_n =
-        # hub so the first observed delta is Σ|hub_n(1) − hub(0)|.
-        state = self.vertices.select(
-            "vid",
-            F.lit(1.0 / self.V).alias("hub"),
-            F.lit(0.0).alias("auth"),
-            F.lit(1.0 / self.V).alias("prev_hub_n"),
-        )
-        sh, sa = 1.0, 1.0
-        if resume:
-            last = ckpt.latest_valid_step()
-            if last is not None:
-                cand = ckpt.read(self.spark, last)
-                required = {"vid", "hub", "auth", "prev_hub_n"}
-                if set(cand.columns) == required:
-                    start_step = last
-                    state = cand
-                    # take the norm scalars from the MANIFEST (json
-                    # float roundtrip is exact), not a recomputed
-                    # aggregate: Spark randomizes shuffle-block fetch
-                    # order, so re-summing doubles over the same
-                    # parquet can differ from the original run at the
-                    # ULP — the manifest carries the original run's
-                    # exact literal divisors instead.
-                    m = next(
-                        (x for x in ckpt.manifests() if x["superstep"] == last),
-                        None,
-                    )
-                    met = (m or {}).get("metrics", {})
-                    if "sh" in met and "sa" in met:
-                        sh, sa = float(met["sh"]), float(met["sa"])
-                    else:  # manifest predates the sh/sa metrics
-                        sh, sa = self._norm_sums(cand)
-                else:
-                    import warnings
+        # state: RAW hub/auth plus the previous step's NORMALIZED hub;
+        # (sh, sa) ride each manifest into the next step's plan as
+        # literal divisors, so the delta lags one step (module docstring)
+        held: list[DataFrame] = []  # a_raw feeds two joins: cached per step
 
-                    warnings.warn(
-                        f"hits: checkpoint at step {last} has columns "
-                        f"{sorted(cand.columns)} (expected {sorted(required)}); "
-                        "ignoring it and restarting from superstep 0",
-                        stacklevel=2,
-                    )
-
-        from pyspark.sql import Observation
-
-        for step in range(start_step, max_iter):
-            t0 = time.monotonic()
+        def step(state: DataFrame, prev: dict, observe) -> DataFrame:
+            sh = prev["sh"]
             # normalize LAST step's raw hub with the known scalar —
             # a literal division, not a job
             h = state.select("vid", (F.col("hub") / F.lit(sh)).alias("hub_n"))
@@ -182,6 +106,7 @@ class HITS:
                 .withColumnRenamed("dst", "avid")
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
+            held.append(a_raw)
             # h ← Aa : edges(dst-partitioned) ⋈ a on dst, sum by src
             h_raw = (
                 self.e_dst.join(
@@ -190,13 +115,13 @@ class HITS:
                 .groupBy("src")
                 .agg(F.sum(F.col("a_raw") * F.col("w")).alias("h_raw"))
             )
-            prev = state.select(
+            prev_n = state.select(
                 "vid",
                 (F.col("hub") / F.lit(sh)).alias("hub_n_prev"),
                 "prev_hub_n",
             )
             new_state = (
-                prev.join(h_raw.hint("SHUFFLE_HASH"), prev.vid == h_raw.src, "left")
+                prev_n.join(h_raw.hint("SHUFFLE_HASH"), prev_n.vid == h_raw.src, "left")
                 .drop("src")
                 .join(
                     a_raw.hint("SHUFFLE_HASH"),
@@ -213,90 +138,54 @@ class HITS:
                     F.abs(F.col("hub_n_prev") - F.col("prev_hub_n")).alias("_dprev"),
                 )
             )
-            obs = Observation(f"hits_step_{step + 1}")
-            observed = new_state.observe(
-                obs, F.sum("_dprev").alias("delta_prev")
-            ).drop("_dprev")
-            written = ckpt.write(observed, step + 1)
-            delta_prev = float(obs.get["delta_prev"] or 0.0)
-            # fed-back scalars come from a deterministic aggregate over
-            # the just-written |V|-row checkpoint, NOT the Observation:
-            # CollectMetrics merges task updates in completion order,
-            # so its float sums wobble at the ULP across runs — fine
-            # for the diagnostic delta, fatal for a literal divisor
-            # that must make resume bit-identical. The read-back agg
-            # costs one tiny job over checkpoint parquet (the expensive
-            # superstep lineage ran once, in the write).
-            sh, sa = self._norm_sums(written)
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            self._annotate_manifest(ckpt, step + 1, delta_prev, sh, sa, wall_ms)
-            a_raw.unpersist()
-            state = written
-            if sh <= 0 or sa <= 0:
-                # no mass flows (edge-less graph slipped through) —
-                # degenerate; report zeros rather than divide by zero.
-                return state.select(
-                    "vid", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
-                )
-            # delta_prev measures superstep `step` (one behind). It is
-            # genuine everywhere except the virtual step-0 init, whose
-            # prev_hub_n equals hub by construction (delta 0) — so the
-            # guard is on absolute step, keeping a resumed run's
-            # break schedule identical to an uninterrupted one.
-            if step > 0 and delta_prev < tol:
-                break
-        return state.select(
+            return observe(new_state, delta=F.sum("_dprev")).drop("_dprev")
+
+        # The divisors fed to the next step are summed over the WRITTEN
+        # |V|-row state by one tiny job, not observed: CollectMetrics
+        # merges task updates in completion order. The read-back sum is
+        # not bit-stable across executions either (its final aggregate
+        # merges partials in shuffle-fetch order, which Spark
+        # randomizes), but each run's divisors are consistent with its
+        # own state, and a resumed run takes the exact doubles its
+        # predecessor committed to the manifest.
+        def post(written: DataFrame, rows: int, prev: dict) -> dict:
+            held.pop().unpersist()
+            row = written.agg(F.sum("hub").alias("sh"), F.sum("auth").alias("sa")).collect()[0]
+            return {"sh": float(row["sh"] or 0.0), "sa": float(row["sa"] or 0.0)}
+
+        # virtual step-0 state: hub uniform (already L1-normalized →
+        # sh=1), auth 0 (sa=1 is a never-used divisor), prev_hub_n =
+        # hub so the first observed delta is Σ|hub_n(1) − hub(0)|.
+        # delta measures superstep k−1 (one behind); it is genuine
+        # everywhere except at step 1, whose delta compares the
+        # virtual init with itself — so the guard is on absolute step,
+        # keeping a resumed run's stop schedule identical. sh or sa at
+        # 0 means no mass flows (an edge-less graph slipped through).
+        run = run_supersteps(
+            ckpt_dir, "hits", self.fingerprint, {"vid", "hub", "auth", "prev_hub_n"},
+            self.vertices.select(
+                "vid",
+                F.lit(1.0 / self.V).alias("hub"),
+                F.lit(0.0).alias("auth"),
+                F.lit(1.0 / self.V).alias("prev_hub_n"),
+            ),
+            step,
+            lambda m, k: m["sh"] <= 0 or m["sa"] <= 0 or (k > 1 and m["delta"] < tol),
+            max_iter,
+            post=post,
+            carry={"sh": 1.0, "sa": 1.0},
+            resume=resume,
+        )
+        sh, sa = run.metrics["sh"], run.metrics["sa"]
+        if sh <= 0 or sa <= 0:
+            return run.state.select(
+                "vid", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")
+            )
+        return run.state.select(
             "vid",
             (F.col("hub") / F.lit(sh)).alias("hub"),
             (F.col("auth") / F.lit(sa)).alias("auth"),
         )
-
-    @staticmethod
-    def _annotate_manifest(
-        ckpt: CheckpointManager, step: int, delta: float,
-        sh: float, sa: float, wall_ms: int,
-    ) -> None:
-        """delta = the PREVIOUS superstep's L1 hub change; sh/sa = this
-        step's raw norm sums (resume needs them to rebuild the literal
-        divisors — json float roundtrip is exact, so a resumed run's
-        arithmetic is bit-identical)."""
-        import json
-        import os
-
-        p = ckpt.manifest_path(step)
-        with open(p) as fh:
-            m = json.load(fh)
-        m["metrics"] = {"delta": delta, "sh": sh, "sa": sa}
-        m["wall_ms"] = wall_ms
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(m, fh)
-        os.rename(tmp, p)
-
-    @staticmethod
-    def _norm_sums(state: DataFrame) -> tuple[float, float]:
-        """(Σ hub_raw, Σ auth_raw) over a checkpointed state. NOT
-        bit-stable across executions: the final aggregate merges
-        per-split partials in shuffle-fetch order, which Spark
-        randomizes, so double sums can wobble at the ULP between two
-        runs over the same parquet. Fine for the within-run divisors
-        (every run's output carries its own consistent ULP draw);
-        resume therefore reads the ORIGINAL run's scalars from the
-        manifest instead of calling this again (see run())."""
-        row = state.agg(
-            F.sum("hub").alias("sh"), F.sum("auth").alias("sa")
-        ).collect()[0]
-        return float(row["sh"] or 0.0), float(row["sa"] or 0.0)
-
-    def unpersist(self) -> None:
-        dfs = [self.vertices, self.e_src, self.e_dst]
-        if self._own_edges:
-            dfs.append(self._edges_in)
-        for df in dfs:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
 
 
 def hits(
@@ -308,8 +197,5 @@ def hits(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Functional entry point; see :class:`HITS`."""
-    h = HITS(spark, edges, num_partitions=num_partitions)
-    try:
+    with HITS(spark, edges, num_partitions=num_partitions) as h:
         return h.run(tol=tol, max_iter=max_iter, ckpt_dir=ckpt_dir)
-    finally:
-        h.unpersist()

@@ -32,18 +32,18 @@ just the graph).
 
 from __future__ import annotations
 
-import time
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..plans.ckpt import CheckpointManager, mix_fingerprint
-from .pagerank import _vertices_from_edges
+from ..plans.ckpt import count_hash, mix_fingerprint
+from ..plans.superstep import run_supersteps
+from .pagerank import Prepared, _vertices_from_edges
 from .partitioning import resolve_partitions
 
 
-class Katz:
+class Katz(Prepared):
     """Prepared Katz centrality over an aggregated (src, dst, w)
     edge table."""
 
@@ -53,33 +53,13 @@ class Katz:
         edges: DataFrame,
         num_partitions: int | None = None,
     ):
-        self.spark = spark
-        self._own_edges = not (
-            edges.storageLevel.useMemory or edges.storageLevel.useDisk
-        )
-        edges = (
-            edges.persist(StorageLevel.MEMORY_AND_DISK)
-            if self._own_edges
-            else edges
-        )
-        self._edges_in = edges
-        self.P = resolve_partitions(spark, edges, num_partitions)
-
-        self.vertices = _vertices_from_edges(edges).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        e = edges.select("src", "dst", F.col("w").cast("double").alias("w"))
-        self.e_src = e.repartition(self.P, "src").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        vrow = self.vertices.agg(F.count("*").alias("v")).collect()[0]
-        self.V = int(vrow["v"])
-        erow = self.e_src.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("src", "dst", "w")), F.lit(0)).alias(
-                "h"
-            ),
-        ).collect()[0]
+        super().__init__(spark, edges)
+        self.P = resolve_partitions(spark, self.edges, num_partitions)
+        self.vertices = self._cache(_vertices_from_edges(self.edges))
+        e = self.edges.select("src", "dst", F.col("w").cast("double").alias("w"))
+        self.e_src = self._cache(e.repartition(self.P, "src"))
+        self.V = self.vertices.count()
+        erow = count_hash(self.e_src, ("src", "dst", "w"))
         self.E = int(erow["n"])
         self._graph_h = int(erow["h"])
 
@@ -109,50 +89,17 @@ class Katz:
     ) -> DataFrame:
         """Iterate to convergence; returns (vid, katz), L2-normalized
         like networkx. Raises on detected divergence (α ≥ 1/λ_max)."""
-        import tempfile
-
-        ckpt = CheckpointManager(
-            ckpt_dir or tempfile.mkdtemp(prefix="katz_ckpt_"),
-            "katz",
-            fingerprint=self._fingerprint(alpha, beta),
-        )
         if self.V == 0:
             return self.spark.createDataFrame([], "vid long, katz double")
 
-        start_step = 0
-        state = self.vertices.select(
-            "vid", F.lit(0.0).alias("x"), F.lit(0.0).alias("dstep")
-        )
-        if resume:
-            last = ckpt.latest_valid_step()
-            if last is not None:
-                cand = ckpt.read(self.spark, last)
-                required = {"vid", "x", "dstep"}
-                if set(cand.columns) == required:
-                    start_step = last
-                    state = cand
-                else:
-                    import warnings
-
-                    warnings.warn(
-                        f"katz: checkpoint at step {last} has columns "
-                        f"{sorted(cand.columns)} (expected {sorted(required)}); "
-                        "ignoring it and restarting from superstep 0",
-                        stacklevel=2,
-                    )
-
-        prev_delta = None
-        converged = False
-        self._grow = 0
-        for step in range(start_step, max_iter):
-            t0 = time.monotonic()
+        def step(state: DataFrame, prev: dict, observe) -> DataFrame:
             msg = self._messages(state.select("vid", "x"))
-            prev = state.select("vid", F.col("x").alias("x_prev"))
+            old = state.select("vid", F.col("x").alias("x_prev"))
             xn = F.lit(float(alpha)) * F.coalesce(F.col("m"), F.lit(0.0)) + F.lit(
                 float(beta)
             )
-            new_state = (
-                prev.join(msg.hint("SHUFFLE_HASH"), prev.vid == msg.dst, "left")
+            return (
+                old.join(msg.hint("SHUFFLE_HASH"), old.vid == msg.dst, "left")
                 .drop("dst")
                 .select(
                     "vid",
@@ -160,47 +107,51 @@ class Katz:
                     F.abs(xn - F.col("x_prev")).alias("dstep"),
                 )
             )
-            from pyspark.sql import Observation
 
-            obs = Observation(f"katz_step_{step + 1}")
-            observed = new_state.observe(obs, F.sum("dstep").alias("delta"))
-            written = ckpt.write(observed, step + 1)
-            delta = float(obs.get["delta"])
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            self._annotate_manifest(ckpt, step + 1, delta, wall_ms)
-            state = written
+        # α ≥ 1/λ_max makes the delta sequence grow geometrically
+        # after the β transient; five successive growths is the
+        # loud-divergence heuristic (a converging run's delta shrinks
+        # by ~αλ_max < 1 every superstep).
+        trend = {"delta": None, "grow": 0}
+
+        def converged(m: dict, k: int) -> bool:
+            delta = m["delta"]
             if delta < self.V * tol:
-                converged = True
-                break
-            # α ≥ 1/λ_max makes the delta sequence grow geometrically
-            # after the β transient; five successive growths is the
-            # loud-divergence heuristic (a converging run's delta
-            # shrinks by ~αλ_max < 1 every superstep).
-            if prev_delta is not None and delta > prev_delta:
-                self._grow = getattr(self, "_grow", 0) + 1
-                if self._grow >= 5 and step >= 8:
+                return True
+            if trend["delta"] is not None and delta > trend["delta"]:
+                trend["grow"] += 1
+                if trend["grow"] >= 5 and k > 8:
                     raise ValueError(
                         f"katz: L1 delta grew 5 supersteps in a row "
                         f"(now {delta:.3g}) — alpha={alpha} is at or above "
                         "1/lambda_max for this graph; choose a smaller alpha"
                     )
             else:
-                self._grow = 0
-            prev_delta = delta
-        if not converged and start_step < max_iter:
-            import warnings
+                trend["grow"] = 0
+            trend["delta"] = delta
+            return False
 
+        run = run_supersteps(
+            ckpt_dir, "katz", self._fingerprint(alpha, beta), {"vid", "x", "dstep"},
+            self.vertices.select("vid", F.lit(0.0).alias("x"), F.lit(0.0).alias("dstep")),
+            step,
+            converged,
+            max_iter,
+            metrics={"delta": F.sum("dstep")},
+            resume=resume,
+        )
+        if run.step > run.start and not run.converged:
             warnings.warn(
                 f"katz: not converged after {max_iter} supersteps "
-                f"(last L1 delta {prev_delta}); returning the current iterate",
+                f"(last L1 delta {trend['delta']}); returning the current iterate",
                 stacklevel=2,
             )
         # final L2 normalization (networkx semantics); s=1 when the
         # norm is zero (all-zero fixpoint is only possible at beta=0).
-        nrow = state.agg(F.sum(F.col("x") * F.col("x")).alias("n2")).collect()[0]
+        nrow = run.state.agg(F.sum(F.col("x") * F.col("x")).alias("n2")).collect()[0]
         n2 = float(nrow["n2"] or 0.0)
         s = 1.0 / (n2**0.5) if n2 > 0 else 1.0
-        return state.select("vid", (F.col("x") * F.lit(s)).alias("katz"))
+        return run.state.select("vid", (F.col("x") * F.lit(s)).alias("katz"))
 
     def _messages(self, x: DataFrame) -> DataFrame:
         """Inbound weighted message sums for one superstep — the
@@ -212,33 +163,6 @@ class Katz:
             .groupBy("dst")
             .agg(F.sum(F.col("x") * F.col("w")).alias("m"))
         )
-
-    @staticmethod
-    def _annotate_manifest(
-        ckpt: CheckpointManager, step: int, delta: float, wall_ms: int
-    ) -> None:
-        import json
-        import os
-
-        p = ckpt.manifest_path(step)
-        with open(p) as fh:
-            m = json.load(fh)
-        m["metrics"] = {"delta": delta}
-        m["wall_ms"] = wall_ms
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(m, fh)
-        os.rename(tmp, p)
-
-    def unpersist(self) -> None:
-        dfs = [self.vertices, self.e_src]
-        if self._own_edges:
-            dfs.append(self._edges_in)
-        for df in dfs:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
 
 
 def katz_centrality(
@@ -252,14 +176,5 @@ def katz_centrality(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Functional entry point; see :class:`Katz`."""
-    k = Katz(spark, edges, num_partitions=num_partitions)
-    try:
-        return k.run(
-            alpha=alpha,
-            beta=beta,
-            tol=tol,
-            max_iter=max_iter,
-            ckpt_dir=ckpt_dir,
-        )
-    finally:
-        k.unpersist()
+    with Katz(spark, edges, num_partitions=num_partitions) as k:
+        return k.run(alpha=alpha, beta=beta, tol=tol, max_iter=max_iter, ckpt_dir=ckpt_dir)

@@ -49,14 +49,14 @@ Oracle: exact match vs ``networkx.core_number`` in tests.
 
 from __future__ import annotations
 
-import time
+import warnings
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.ckpt import CheckpointManager
-from .components import _annotate, _resume_state, symmetrize
+from ..plans.superstep import run_supersteps
+from .components import symmetrize
 from .partitioning import setup_scan
 
 STATE_COLS = {"vid", "est", "chg"}
@@ -75,56 +75,29 @@ def core_numbers(
     """Returns (vid, core) — the core number of every vertex of the
     undirected simple graph underlying ``edges``.
 
-    ``ckpt_every`` (superstep fusion): compose that many synchronous
-    h-index rounds into ONE Spark job and checkpoint only the last.
-    Sound because the synchronous update is deterministic (fused ≡
-    unfused is asserted in tests) and because a converged inner round
-    is idempotent (empty frontier ⇒ no messages ⇒ est unchanged), so
-    checking convergence at block granularity merely risks ≤
-    ``ckpt_every − 1`` free no-op rounds. The trade-offs are explicit:
-    resume granularity and per-round delta metrics coarsen to the
-    block, which is why the contract's four core algorithms (PageRank
-    / CC / LPA / triangles — "every superstep checkpoints",
-    BASELINE.json north_rule) keep cadence 1 and this extension
-    algorithm exposes the knob. h-index convergence ripples one
+    ``ckpt_every`` fuses that many synchronous rounds into one
+    checkpointed job (``plans/superstep.py``): sound because the update
+    is deterministic and a converged round is a no-op (empty frontier ⇒
+    no messages); fused ≡ unfused is asserted in tests. Resume
+    granularity and per-round metrics coarsen to the block, which is
+    why the contract's four core algorithms ("every superstep
+    checkpoints") keep cadence 1. h-index convergence ripples one
     h-step per round (86 rounds at the bench tier) while each round's
     real work shrinks with the frontier, so the wall is dominated by
-    the fixed per-job floor (scheduling + parquet write + read-back)
-    — fusion divides exactly that term.
+    the fixed per-job floor — fusion divides exactly that term.
     """
-    import tempfile
-
-    if ckpt_every < 1:
-        raise ValueError(f"ckpt_every must be >= 1, got {ckpt_every}")
-
-    # single setup scan: sizing + resume fingerprint in one aggregate
-    # over the raw input (round-4 VERDICT #1 pattern); the symmetrized
-    # persist materializes inside round 1.
+    # one setup scan sizes the loop and fingerprints the raw edges;
+    # the symmetrized persist materializes inside superstep 1
     P, fp = setup_scan(spark, edges, num_partitions)
-    ckpt = CheckpointManager(
-        ckpt_dir or tempfile.mkdtemp(prefix="kcore_ckpt_"), "kcore",
-        fingerprint=fp,
-    )
-
     sym = symmetrize(edges).repartition(P, "src").persist(StorageLevel.MEMORY_AND_DISK)
-
-    start = 0
-    est = (
-        sym.groupBy(F.col("src").alias("vid"))
-        .agg(F.count("*").cast("long").alias("est"))
-        .withColumn("chg", F.lit(True))
-    )
-    if resume:
-        state, start = _resume_state(ckpt, spark, STATE_COLS)
-        if state is not None:
-            est = state
 
     w = (
         Window.partitionBy("vid")
         .orderBy(F.col("nest").desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    def _round(est: DataFrame, obs_m: Observation | None) -> DataFrame:
+
+    def step(est: DataFrame, prev: dict, observe) -> DataFrame:
         """One synchronous h-index update as a plan transform —
         chainable without materialization (superstep fusion)."""
         if frontier:
@@ -146,8 +119,7 @@ def core_numbers(
         msgs = edges_in.join(est, edges_in.dst == est.vid).select(
             edges_in.src.alias("vid"), F.col("est").alias("nest")
         )
-        if obs_m is not None:
-            msgs = msgs.observe(obs_m, F.count("*").alias("msg_rows"))
+        msgs = observe(msgs, msg_rows=F.count("*"))
         hist = msgs.groupBy("vid", "nest").agg(F.count("*").alias("cnt"))
         hvals = (
             hist.withColumn("cum", F.sum("cnt").over(w))
@@ -168,70 +140,33 @@ def core_numbers(
             )
         )
 
-    changed = 0
-    rounds = start
-    while rounds < max_iter:
-        t0 = time.monotonic()
-        block = min(ckpt_every, max_iter - rounds)
-        obs_m = Observation(f"kcore_msgs_{rounds + block}")
-        for i in range(block):
-            # message metrics ride the LAST fused round (the one whose
-            # frontier the next block resumes from)
-            est = _round(est, obs_m if i == block - 1 else None)
-            if i < block - 1:
-                # truncate lineage between fused rounds WITHOUT a job:
-                # each round references est three-plus times (frontier
-                # delta, message join, old-estimate join), so an
-                # unmaterialized k-round chain is ~3^k logical-plan
-                # copies and Catalyst compile time dominates the block
-                # (measured: cadence 4 was 8× SLOWER than cadence 1 at
-                # the small tier before this). A lazy localCheckpoint
-                # plants an RDD leaf per round — constant compile cost
-                # — and materializes inside the block's single action;
-                # fault-tolerance loss is bounded by the parquet
-                # checkpoint at block end.
-                est = est.localCheckpoint(eager=False)
-        obs = Observation(f"kcore_step_{rounds + block}")
-        observed = est.observe(obs, F.sum(F.col("chg").cast("long")).alias("changed"))
-        # step index = cumulative ROUND count, so manifests stay
-        # directly comparable across cadences and resume restarts at
-        # the right round budget.
-        written = ckpt.write(observed, rounds + block)
-        changed = int(obs.get["changed"] or 0)
-        # When every inner round after some point has an EMPTY frontier
-        # (the block overshot convergence), AQE's empty-relation
-        # propagation prunes the CollectMetrics node obs_m rides and
-        # its .get raises from the JVM — which happens exactly when
-        # the observed message stream was empty, so 0 is the true
-        # value, not a guess.
-        try:
-            msg_rows = int(obs_m.get["msg_rows"] or 0)
-        except Exception:
-            msg_rows = 0
-        _annotate(
-            ckpt, rounds + block,
-            {"changed": changed, "msg_rows": msg_rows, "rounds_in_block": block},
-            int((time.monotonic() - t0) * 1000),
+    try:
+        run = run_supersteps(
+            ckpt_dir, "kcore", fp, STATE_COLS,
+            sym.groupBy(F.col("src").alias("vid"))
+            .agg(F.count("*").cast("long").alias("est"))
+            .withColumn("chg", F.lit(True)),
+            step,
+            lambda m, _: m["changed"] == 0,
+            max_iter,
+            metrics={"changed": F.sum(F.col("chg").cast("long"))},
+            every=ckpt_every,
+            resume=resume,
         )
-        est = written
-        rounds += block
-        if changed == 0:
-            break
-    if changed > 0:
+    finally:
+        sym.unpersist()
+    if run.step > run.start and not run.converged:
         # max_iter exhausted while estimates were still decreasing:
         # the returned values are UPPER BOUNDS, not core numbers —
         # say so instead of returning plausible-looking wrong values
         # (same contract as connected_components_star's
         # rounds-exhausted warning).
-        import warnings
-
         warnings.warn(
             f"core_numbers: h-index iteration did not converge within "
             f"max_iter={max_iter} (last superstep still changed "
-            f"{changed} estimates); returned values are upper bounds "
+            f"{run.metrics['changed']} estimates); returned values are upper bounds "
             "on the true core numbers — raise max_iter",
             stacklevel=2,
         )
 
-    sym.unpersist()
-    return est.select("vid", F.col("est").alias("core"))
+    return run.state.select("vid", F.col("est").alias("core"))

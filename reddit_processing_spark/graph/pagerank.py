@@ -36,14 +36,12 @@ come back through one 2-column aggregate per superstep.
 
 from __future__ import annotations
 
-import time
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.ckpt import CheckpointManager, mix_fingerprint
+from ..plans.ckpt import count_hash, mix_fingerprint
+from ..plans.superstep import run_supersteps
 
 
 def _vertices_from_edges(edges: DataFrame) -> DataFrame:
@@ -54,12 +52,48 @@ def _vertices_from_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def _csr_block(src, dst, w_norm, vids, ranks):
-    """Shared NumPy core of the CSR message kernel: rank lookup by
-    searchsorted on the sorted vid vector, then per-dst partial
-    reduction with np.bincount. Returns (uniq_dst, sums)."""
-    import numpy as np
+class Prepared:
+    """Setup frames an iterative algorithm caches once and reuses every
+    superstep; ``unpersist`` releases them. The input is cached too
+    unless the caller already did: setup derives several frames from
+    it, and an unpersisted input lineage (e.g. the full transcript
+    extraction) would be recomputed for each (measured 338 s -> 60 s
+    PageRank setup at the scale tier)."""
 
+    def __init__(self, spark: SparkSession, edges: DataFrame):
+        self.spark = spark
+        self._cached: list[DataFrame] = []
+        cached = edges.storageLevel.useMemory or edges.storageLevel.useDisk
+        self.edges = edges if cached else self._cache(edges)
+
+    def _cache(self, df: DataFrame) -> DataFrame:
+        self._cached.append(df.persist(StorageLevel.MEMORY_AND_DISK))
+        return self._cached[-1]
+
+    def unpersist(self) -> None:
+        for df in self._cached:
+            df.unpersist()
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.unpersist()
+
+
+def _csr_kernel_arrow(key, etab, rtab):
+    """Per-block CSR message kernel over an Arrow cogroup, on zero-copy
+    Arrow→NumPy views: rank lookup by searchsorted on the sorted vid
+    vector, then per-dst partial reduction with np.bincount."""
+    import numpy as np
+    import pyarrow as pa
+
+    if etab.num_rows == 0 or rtab.num_rows == 0:
+        return pa.table(
+            {"dst": pa.array([], type=pa.int64()), "contrib": pa.array([], type=pa.float64())}
+        )
+    src, dst, w_norm = (etab.column(c).to_numpy(zero_copy_only=False) for c in ("src", "dst", "w_norm"))
+    vids, ranks = (rtab.column(c).to_numpy(zero_copy_only=False) for c in ("vid", "rank"))
     order = np.argsort(vids, kind="stable")
     vids_s, ranks_s = vids[order], ranks[order]
     pos = np.searchsorted(vids_s, src)
@@ -70,48 +104,10 @@ def _csr_block(src, dst, w_norm, vids, ranks):
     contrib[~hit] = 0.0
     uniq, inv = np.unique(dst, return_inverse=True)
     sums = np.bincount(inv, weights=contrib, minlength=len(uniq))
-    return uniq.astype("int64"), sums
+    return pa.table({"dst": pa.array(uniq.astype("int64")), "contrib": pa.array(sums)})
 
 
-def _csr_kernel(key, edf: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-block CSR message kernel (pandas cogroup flavor) — the
-    ``kernel='csr_pandas'`` fallback path (applyInPandas instead of
-    applyInArrow; same ``_csr_block`` math, so results are identical —
-    asserted by the kernel-parity test). Use when an environment's
-    Arrow cogroup path is unavailable; the Arrow flavor avoids the
-    pandas conversion and is the default."""
-    if len(edf) == 0 or len(rdf) == 0:
-        return pd.DataFrame({"dst": pd.Series(dtype="int64"), "contrib": pd.Series(dtype="float64")})
-    uniq, sums = _csr_block(
-        edf["src"].to_numpy(),
-        edf["dst"].to_numpy(),
-        edf["w_norm"].to_numpy(),
-        rdf["vid"].to_numpy(),
-        rdf["rank"].to_numpy(),
-    )
-    return pd.DataFrame({"dst": uniq, "contrib": sums})
-
-
-def _csr_kernel_arrow(key, etab, rtab):
-    """Per-block CSR message kernel (Arrow cogroup flavor): zero-copy
-    Arrow→NumPy views, no pandas conversion on either side."""
-    import pyarrow as pa
-
-    if etab.num_rows == 0 or rtab.num_rows == 0:
-        return pa.table(
-            {"dst": pa.array([], type=pa.int64()), "contrib": pa.array([], type=pa.float64())}
-        )
-    uniq, sums = _csr_block(
-        etab.column("src").to_numpy(zero_copy_only=False),
-        etab.column("dst").to_numpy(zero_copy_only=False),
-        etab.column("w_norm").to_numpy(zero_copy_only=False),
-        rtab.column("vid").to_numpy(zero_copy_only=False),
-        rtab.column("rank").to_numpy(zero_copy_only=False),
-    )
-    return pa.table({"dst": pa.array(uniq), "contrib": pa.array(sums)})
-
-
-class PageRank:
+class PageRank(Prepared):
     """Prepared PageRank over an aggregated edge table.
 
     Usage::
@@ -138,23 +134,13 @@ class PageRank:
         a column carried in the superstep state, so the iteration
         plan is unchanged (no extra join; the scalar base folds into
         a pw-weighted column)."""
-        if kernel not in ("csr", "sql", "csr_pandas"):
+        if kernel not in ("csr", "sql"):
             raise ValueError(f"unknown kernel {kernel!r}")
-        self.spark = spark
+        super().__init__(spark, edges)
+        edges = self.edges
         self.kernel = kernel
         self.P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
         self.salt = max(1, salt)
-
-        # Materialize the input ONCE: setup derives vertices, degrees,
-        # dangling flags, and the blocked edge table from it — without
-        # this an unpersisted input lineage (e.g. the full transcript
-        # extraction) is recomputed ~6x (measured 338s -> 60s setup at
-        # the scale tier).
-        self._own_edges = not (
-            edges.storageLevel.useMemory or edges.storageLevel.useDisk
-        )
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK) if self._own_edges else edges
-        self._edges_in = edges
 
         # state skeleton: every vertex + its dangling flag (no out-edges)
         # — carried through every superstep so the per-step delta and
@@ -177,7 +163,7 @@ class PageRank:
             verts = verts.join(pvec, "vid", "left").withColumn(
                 "_p_raw", F.coalesce(F.col("_p_raw"), F.lit(0.0))
             )
-        self.vertices = verts.persist(StorageLevel.MEMORY_AND_DISK)
+        self.vertices = self._cache(verts)
         aggs = [
             F.count("*").alias("v"),
             F.sum(F.when(~F.col("has_out"), 1).otherwise(0)).alias("d"),
@@ -223,15 +209,12 @@ class PageRank:
             keys = ["src"]
         else:
             keys = ["blk", "slt"] if self.salt > 1 else ["blk"]
-        self.enorm = enorm.repartition(self.P, *keys).persist(StorageLevel.MEMORY_AND_DISK)
+        self.enorm = self._cache(enorm.repartition(self.P, *keys))
         # E and the graph fingerprint come from the SAME warm-up
         # aggregate (no extra job); the fingerprint is stamped into
         # every checkpoint manifest so resume rejects state written for
         # a different edge set (round-2 ADVICE).
-        erow = self.enorm.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("src", "dst", "w_norm")), F.lit(0)).alias("h"),
-        ).collect()[0]
+        erow = count_hash(self.enorm, ("src", "dst", "w_norm"))
         self.E = int(erow["n"])
         # identity = edge set ⊕ (personalization vector, when set)
         self.fingerprint = mix_fingerprint(self.E, int(erow["h"]) ^ self._pfp)
@@ -257,11 +240,9 @@ class PageRank:
         else:
             grouped_e = self.enorm.groupBy("blk")
             grouped_r = rblk.groupBy("blk")
-        cg = grouped_e.cogroup(grouped_r)
-        if self.kernel == "csr_pandas":
-            partial = cg.applyInPandas(_csr_kernel, "dst long, contrib double")
-        else:
-            partial = cg.applyInArrow(_csr_kernel_arrow, "dst long, contrib double")
+        partial = grouped_e.cogroup(grouped_r).applyInArrow(
+            _csr_kernel_arrow, "dst long, contrib double"
+        )
         return partial.groupBy("dst").agg(F.sum("contrib").alias("contrib"))
 
     def run(
@@ -277,19 +258,9 @@ class PageRank:
         With ``ckpt_dir`` every superstep persists state+manifest and a
         killed run resumes from the last valid superstep.
         """
-        import tempfile
-
-        ckpt = CheckpointManager(
-            ckpt_dir or tempfile.mkdtemp(prefix="pr_ckpt_"),
-            "pagerank",
-            fingerprint=self.fingerprint,
-        )
-        V, D = self.V, self.D
+        V = self.V
         if V == 0:
             return self.spark.createDataFrame([], "vid long, rank double")
-
-        start_step = 0
-        dangle = D / V  # analytic at uniform init
         init_cols = [
             F.col("vid"),
             F.lit(1.0 / V).alias("rank"),
@@ -298,47 +269,14 @@ class PageRank:
         ]
         if self.personalized:
             init_cols.append((F.col("_p_raw") / F.lit(self.psum)).alias("pw"))
-        init = self.vertices.select(*init_cols)
-        state = init
-        if resume:
-            last = ckpt.latest_valid_step()
-            if last is not None:
-                cand = ckpt.read(self.spark, last)
-                # schema compatibility gate: a checkpoint written by an
-                # older state layout (e.g. bare (vid, rank)) is ignored
-                # with a warning — resuming it would crash with an
-                # unresolved-column error mid-superstep (round-1 ADVICE).
-                # personalized runs carry pw, so a uniform run also
-                # refuses a personalized checkpoint and vice versa.
-                required = {"vid", "rank", "has_out", "dstep"} | (
-                    {"pw"} if self.personalized else set()
-                )
-                if set(cand.columns) == required:
-                    start_step = last
-                    state = cand
-                    dangle = (
-                        cand.agg(
-                            F.sum(F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0))
-                        ).collect()[0][0]
-                        or 0.0
-                    )
-                else:
-                    import warnings
 
-                    warnings.warn(
-                        f"pagerank: checkpoint at step {last} has columns "
-                        f"{sorted(cand.columns)} (expected {sorted(required)}); "
-                        "ignoring it and restarting from superstep 0",
-                        stacklevel=2,
-                    )
-
-        for step in range(start_step, max_iter):
-            t0 = time.monotonic()
+        def step(state: DataFrame, prev: dict, observe) -> DataFrame:
+            dangle = prev["dangle"]
             msgs = self._messages(state)
             # state ⋈ msgs carries old rank + dangling flag through, so
             # the per-step L1 delta is a COLUMN of the new state (free
-            # lineage metric in the checkpoint) and the two scalars come
-            # from one aggregate over the materialized read-back.
+            # lineage metric in the checkpoint) and both scalars are
+            # observed during the checkpoint write — no second job.
             if self.personalized:
                 # r' = (1-d)·pw + d·(contrib + dangle·pw)
                 new_rank = F.lit((1.0 - d) + d * dangle) * F.col("pw") + F.lit(
@@ -357,56 +295,30 @@ class PageRank:
             ]
             if self.personalized:
                 out_cols.append(F.col("pw"))
-            new_state = state.join(
+            return state.join(
                 msgs.hint("SHUFFLE_HASH"), state.vid == msgs.dst, "left"
             ).select(*out_cols)
-            # observe() computes the two scalars DURING the checkpoint
-            # write pass — no second job, no read-back scan.
-            from pyspark.sql import Observation
 
-            obs = Observation(f"pr_step_{step + 1}")
-            observed = new_state.observe(
-                obs,
-                F.sum("dstep").alias("delta"),
-                F.sum(
-                    F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0)
-                ).alias("dangle"),
-            )
-            written = ckpt.write(observed, step + 1)
-            row = obs.get
-            delta, dangle = float(row["delta"]), float(row["dangle"] or 0.0)
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            # re-stamp the manifest with this superstep's delta metrics
-            self._annotate_manifest(ckpt, step + 1, delta, dangle, wall_ms)
-            state = written
-            if delta < tol:
-                break
-        return state.select("vid", "rank")
-
-    @staticmethod
-    def _annotate_manifest(ckpt: CheckpointManager, step: int, delta: float, dangle: float, wall_ms: int) -> None:
-        import json
-        import os
-
-        p = ckpt.manifest_path(step)
-        with open(p) as fh:
-            m = json.load(fh)
-        m["metrics"] = {"delta": delta, "dangle": dangle}
-        m["wall_ms"] = wall_ms
-        tmp = p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(m, fh)
-        os.rename(tmp, p)
-
-    def unpersist(self) -> None:
-        dfs = [self.vertices, self.enorm]
-        if self._own_edges:
-            dfs.append(self._edges_in)
-        for df in dfs:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+        # state columns double as the resume schema gate: a checkpoint
+        # of an older layout (e.g. bare (vid, rank)) is refused, and a
+        # uniform run refuses a personalized checkpoint and vice versa.
+        # The dangling mass of the resumed step is read from its
+        # manifest (analytic D/V at the uniform start).
+        run = run_supersteps(
+            ckpt_dir, "pagerank", self.fingerprint,
+            {"vid", "rank", "has_out", "dstep"} | ({"pw"} if self.personalized else set()),
+            self.vertices.select(*init_cols),
+            step,
+            lambda m, _: m["delta"] < tol,
+            max_iter,
+            metrics={
+                "delta": F.sum("dstep"),
+                "dangle": F.sum(F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0)),
+            },
+            carry={"dangle": self.D / V},
+            resume=resume,
+        )
+        return run.state.select("vid", "rank")
 
 
 def pagerank(
@@ -422,15 +334,8 @@ def pagerank(
     personalization: DataFrame | None = None,
 ) -> DataFrame:
     """Functional entry point; see :class:`PageRank`."""
-    pr = PageRank(
-        spark,
-        edges,
-        num_partitions=num_partitions,
-        salt=salt,
-        kernel=kernel,
+    with PageRank(
+        spark, edges, num_partitions=num_partitions, salt=salt, kernel=kernel,
         personalization=personalization,
-    )
-    try:
+    ) as pr:
         return pr.run(d=d, tol=tol, max_iter=max_iter, ckpt_dir=ckpt_dir)
-    finally:
-        pr.unpersist()

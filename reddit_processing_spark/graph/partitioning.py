@@ -37,6 +37,8 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.ckpt import count_hash, mix_fingerprint
+
 TARGET_ROWS_PER_PARTITION = 100_000
 MIN_PARTITIONS = 8
 
@@ -93,16 +95,20 @@ def setup_scan(
     identifies the RAW input rather than the canonical edge set — a
     stricter identity, so the only possible false outcome at resume is
     a harmless restart, never a wrong acceptance."""
-    from pyspark.sql import functions as F
-
-    from ..plans.ckpt import mix_fingerprint
-
-    row = edges.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("h"),
-    ).collect()[0]
+    row = count_hash(edges, cols)
     n = int(row["n"])
     return (
         clamp_partitions(spark, n * max(1, int(sym_factor)), num_partitions),
         mix_fingerprint(n, int(row["h"])),
     )
+
+
+def source_fingerprint(fp: int, sources: DataFrame) -> int:
+    """Checkpoint identity of a source-seeded traversal: the edge-set
+    fingerprint ``fp`` mixed with the (distinct, (vid)) source set —
+    distances are a function of both, so a resume against state written
+    for a different source set must be rejected exactly like a
+    different graph would be (round-3 ADVICE). One aggregate over the
+    source set."""
+    row = count_hash(sources, ("vid",))
+    return mix_fingerprint(fp, int(row["h"]) ^ int(row["n"]))

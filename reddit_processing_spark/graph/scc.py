@@ -45,13 +45,15 @@ extraction alone would peel one vertex per round.
 from __future__ import annotations
 
 import time
+import warnings
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..plans.ckpt import CheckpointManager
-from .components import _annotate, _resume_state
+from ..plans.superstep import checkpoint_base, resume_state
+from .pagerank import _vertices_from_edges
 from .partitioning import setup_scan
 
 STATE_COLS = {"vid", "scc"}
@@ -92,6 +94,18 @@ def _min_prop(e: DataFrame, verts: DataFrame, max_inner: int, tag: str) -> DataF
     return labels.select("vid", "lab")
 
 
+def _without(remaining: DataFrame, re: DataFrame, gone: DataFrame):
+    """``remaining`` vertices and their edge set ``re`` minus the
+    decided vertices ``gone`` (vid), each behind an eager barrier."""
+    remaining = remaining.join(gone, "vid", "left_anti").localCheckpoint(eager=True)
+    re = (
+        re.join(gone, re.src == gone.vid, "left_anti")
+        .join(gone.withColumnRenamed("vid", "_d"), re.dst == F.col("_d"), "left_anti")
+        .localCheckpoint(eager=True)
+    )
+    return remaining, re
+
+
 def strongly_connected_components(
     spark: SparkSession,
     edges: DataFrame,
@@ -106,11 +120,7 @@ def strongly_connected_components(
     ``edges`` (src → dst; self-loops ignored for membership). If
     ``max_outer`` is exhausted, still-undecided vertices come back
     with scc = NULL and a warning is raised."""
-    import tempfile
-
-    # single setup scan (round-4 VERDICT #1 pattern): the raw-input
-    # aggregate sizes partitions and fingerprints the instance; e0's
-    # canonicalization materializes under its persist in round 1.
+    # one setup scan sizes the loop and fingerprints the raw edges
     P, fp = setup_scan(spark, edges, num_partitions, sym_factor=1)
     e0 = (
         edges.select("src", "dst")
@@ -121,22 +131,14 @@ def strongly_connected_components(
     )
     # vertex universe from the UNFILTERED input: a vertex whose only
     # edge is a self-loop is still a (singleton) SCC member.
-    verts_all = (
-        edges.select(F.col("src").alias("vid"))
-        .unionByName(edges.select(F.col("dst").alias("vid")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ckpt = CheckpointManager(
-        ckpt_dir or tempfile.mkdtemp(prefix="scc_ckpt_"), "scc", fingerprint=fp
-    )
+    verts_all = _vertices_from_edges(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    ckpt = CheckpointManager(checkpoint_base(ckpt_dir, "scc"), "scc", fingerprint=fp)
 
     assigned = spark.createDataFrame([], "vid long, scc long")
     start = 0
-    if resume:
-        state, start = _resume_state(ckpt, spark, STATE_COLS)
-        if state is not None:
-            assigned = state
+    resumed = resume_state(ckpt, spark, STATE_COLS) if resume else None
+    if resumed is not None:
+        assigned, start, _ = resumed
 
     remaining = verts_all.join(assigned, "vid", "left_anti").localCheckpoint(eager=True)
     re = (
@@ -170,18 +172,7 @@ def strongly_connected_components(
             assigned = assigned.unionByName(
                 trivial.select("vid", F.col("vid").alias("scc"))
             ).localCheckpoint(eager=True)
-            remaining = remaining.join(trivial, "vid", "left_anti").localCheckpoint(
-                eager=True
-            )
-            re = (
-                re.join(trivial, re.src == trivial.vid, "left_anti")
-                .join(
-                    trivial.withColumnRenamed("vid", "_d"),
-                    re.dst == F.col("_d"),
-                    "left_anti",
-                )
-                .localCheckpoint(eager=True)
-            )
+            remaining, re = _without(remaining, re, trivial)
         # ---- forward/backward propagation + extraction ----------
         n_found = 0
         if not remaining.isEmpty():
@@ -202,31 +193,14 @@ def strongly_connected_components(
             found = found.localCheckpoint(eager=True)
             n_found = int(obs_f.get["n"] or 0)
             assigned = assigned.unionByName(found)
-            remaining = remaining.join(found, "vid", "left_anti").localCheckpoint(
-                eager=True
-            )
-            re = (
-                re.join(found, re.src == found.vid, "left_anti")
-                .join(
-                    found.withColumnRenamed("vid", "_d"),
-                    re.dst == F.col("_d"),
-                    "left_anti",
-                )
-                .localCheckpoint(eager=True)
-            )
+            remaining, re = _without(remaining, re, found.select("vid"))
         # ---- durable outer-round checkpoint ----------------------
-        assigned = ckpt.write(assigned, outer + 1)
-        _annotate(
-            ckpt,
-            outer + 1,
-            {"trimmed": n_trimmed, "extracted": n_found},
-            int((time.monotonic() - t0) * 1000),
+        assigned = ckpt.write(
+            assigned, outer + 1, {"trimmed": n_trimmed, "extracted": n_found}, t0=t0
         )
 
     leftover = remaining
     if not leftover.isEmpty():
-        import warnings
-
         warnings.warn(
             f"strongly_connected_components: max_outer={max_outer} exhausted "
             "with undecided vertices; they are returned with scc = NULL — "

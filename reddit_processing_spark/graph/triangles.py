@@ -36,6 +36,35 @@ def canonical_edges(edges: DataFrame) -> DataFrame:
     )
 
 
+def orient_by_degree(und: DataFrame, sym: DataFrame) -> DataFrame:
+    """(lo, hi): each canonical edge (a, b) of ``und`` oriented from
+    its lower-degree endpoint (ties by vid), degrees taken from the
+    symmetric edges ``sym`` — wedges then pivot on low-degree vertices."""
+    deg = sym.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("d"))
+    lo_first = (F.col("da") < F.col("db")) | (
+        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
+    )
+    return (
+        und.join(deg.select(F.col("vid").alias("a"), F.col("d").alias("da")), "a")
+        .join(deg.select(F.col("vid").alias("b"), F.col("d").alias("db")), "b")
+        .select(
+            F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
+            F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
+        )
+    )
+
+
+def closed_wedges(e: DataFrame, sym: DataFrame) -> DataFrame:
+    """(p, x, y) once per triangle: wedges pivot at ``lo`` of the
+    oriented edges ``e`` (lo, hi) with a total order on the two spokes,
+    and close by a LEFT SEMI probe of the symmetric edges ``sym``."""
+    e1 = e.select(F.col("lo").alias("p"), F.col("hi").alias("x"))
+    e2 = e.select(F.col("lo").alias("p"), F.col("hi").alias("y"))
+    wedges = e1.join(e2, "p").filter(F.col("x") < F.col("y"))
+    closing = sym.select(F.col("src").alias("x"), F.col("dst").alias("y"))
+    return wedges.join(closing, ["x", "y"], "left_semi")
+
+
 def triangle_count(
     spark: SparkSession,
     edges: DataFrame,
@@ -43,60 +72,16 @@ def triangle_count(
 ) -> DataFrame:
     """Returns (vid, tri) for every vertex of the undirected graph."""
     sym = symmetrize(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    # canonical view comes from the persisted symmetric edges (one
+    # scan of the possibly-expensive input lineage, reused throughout)
+    und = sym.filter(F.col("src") < F.col("dst")).select(
+        F.col("src").alias("a"), F.col("dst").alias("b")
+    )
     if degree_oriented:
-        # orient each undirected edge from lower-degree to higher-degree
-        # endpoint (ties by vid) — wedge pivots are low-degree vertices.
-        deg = sym.groupBy("src").agg(F.count("*").alias("d")).select(
-            F.col("src").alias("vid"), "d"
-        )
-        # canonical view comes from the persisted symmetric edges (one
-        # scan of the possibly-expensive input lineage, reused throughout)
-        und = sym.filter(F.col("src") < F.col("dst")).select(
-            F.col("src").alias("a"), F.col("dst").alias("b")
-        )
-        e = (
-            und.join(deg.select(F.col("vid").alias("a"), F.col("d").alias("da")), "a")
-            .join(deg.select(F.col("vid").alias("b"), F.col("d").alias("db")), "b")
-            .select(
-                F.when(
-                    (F.col("da") < F.col("db"))
-                    | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))),
-                    F.col("a"),
-                )
-                .otherwise(F.col("b"))
-                .alias("lo"),
-                F.when(
-                    (F.col("da") < F.col("db"))
-                    | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))),
-                    F.col("b"),
-                )
-                .otherwise(F.col("a"))
-                .alias("hi"),
-            )
-        )
-        e = e.persist(StorageLevel.MEMORY_AND_DISK)
-        # wedges pivot at 'lo' with a total order on the two spokes so
-        # each triangle closes exactly once.
-        e1 = e.select(F.col("lo").alias("p"), F.col("hi").alias("x"))
-        e2 = e.select(F.col("lo").alias("p"), F.col("hi").alias("y"))
-        wedges = e1.join(e2, "p").filter(F.col("x") < F.col("y"))
-        closing = sym.select(F.col("src").alias("x"), F.col("dst").alias("y"))
-        tris = wedges.join(closing, ["x", "y"], "left_semi")
+        e = orient_by_degree(und, sym)
     else:
-        e = (
-            sym.filter(F.col("src") < F.col("dst"))
-            .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        e1 = e.select(F.col("a").alias("p"), F.col("b").alias("x"))
-        wedges = (
-            e1.alias("w1")
-            .join(e1.alias("w2"), F.col("w1.p") == F.col("w2.p"))
-            .filter(F.col("w1.x") < F.col("w2.x"))
-            .select(F.col("w1.p").alias("p"), F.col("w1.x").alias("x"), F.col("w2.x").alias("y"))
-        )
-        closing = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        tris = wedges.join(closing, ["x", "y"], "left_semi")
+        e = und.select(F.col("a").alias("lo"), F.col("b").alias("hi"))
+    tris = closed_wedges(e.persist(StorageLevel.MEMORY_AND_DISK), sym)
 
     per_vertex = (
         tris.select(F.explode(F.array("p", "x", "y")).alias("vid"))

@@ -28,15 +28,16 @@ than the last.
 
 from __future__ import annotations
 
-import time
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..plans.ckpt import CheckpointManager, graph_fingerprint, mix_fingerprint
-from .partitioning import resolve_partitions
-from .triangles import canonical_edges
+from ..plans.ckpt import count_hash, mix_fingerprint
+from ..plans.superstep import run_supersteps
+from .partitioning import clamp_partitions
+from .triangles import canonical_edges, closed_wedges, orient_by_degree
 
 
 def _edge_support(e: DataFrame) -> DataFrame:
@@ -48,23 +49,7 @@ def _edge_support(e: DataFrame) -> DataFrame:
     sym = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    deg = sym.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("d"))
-    lo_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = (
-        e.join(deg.select(F.col("vid").alias("a"), F.col("d").alias("da")), "a")
-        .join(deg.select(F.col("vid").alias("b"), F.col("d").alias("db")), "b")
-        .select(
-            F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("lo"),
-            F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("hi"),
-        )
-    )
-    e1 = oriented.select(F.col("lo").alias("p"), F.col("hi").alias("x"))
-    e2 = oriented.select(F.col("lo").alias("p"), F.col("hi").alias("y"))
-    wedges = e1.join(e2, "p").filter(F.col("x") < F.col("y"))
-    closing = sym.select(F.col("src").alias("x"), F.col("dst").alias("y"))
-    tris = wedges.join(closing, ["x", "y"], "left_semi")
+    tris = closed_wedges(orient_by_degree(e, sym), sym)
     tri_edges = tris.select(
         F.explode(
             F.array(
@@ -96,91 +81,46 @@ def k_truss(
     """The k-truss edge set (a, b) of the undirected simple graph
     underlying ``edges`` — canonical a<b rows; possibly empty.
     Matches ``networkx.k_truss(G, k).edges`` exactly."""
-    import tempfile
-
     if k < 2:
         raise ValueError(f"k_truss: k must be >= 2, got {k}")
     thresh = k - 2
     e = canonical_edges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    P = resolve_partitions(spark, e, num_partitions)
-    fp = mix_fingerprint(int(k), graph_fingerprint(e, cols=("a", "b")))
-    ckpt = CheckpointManager(
-        ckpt_dir or tempfile.mkdtemp(prefix="truss_ckpt_"),
-        "truss",
-        fingerprint=fp,
-    )
-    start_round = 0
-    n_edges = None
-    if resume:
-        last = ckpt.latest_valid_step()
-        if last is not None:
-            cand = ckpt.read(spark, last)
-            if set(cand.columns) == {"a", "b"}:
-                e.unpersist()
-                e = cand
-                start_round = last
-            else:
-                import warnings
+    row = count_hash(e, ("a", "b"))
+    n_edges = int(row["n"])
+    if n_edges == 0:
+        e.unpersist()
+        return spark.createDataFrame([], "a long, b long")
+    P = clamp_partitions(spark, n_edges, num_partitions)
 
-                warnings.warn(
-                    f"k_truss: checkpoint at round {last} has columns "
-                    f"{sorted(cand.columns)} (expected ['a', 'b']); "
-                    "ignoring it and restarting from round 0",
-                    stacklevel=2,
-                )
-    for rnd in range(start_round, max_rounds):
-        t0 = time.monotonic()
-        if n_edges is None:
-            n_edges = e.count()
-        if n_edges == 0:
-            break
-        kept = (
-            _edge_support(e)
+    def step(cur: DataFrame, prev: dict, observe) -> DataFrame:
+        return (
+            _edge_support(cur)
             .filter(F.col("support") >= thresh)
             .select("a", "b")
             .repartition(P, "a")
         )
-        written = ckpt.write(kept, rnd + 1)
-        n_kept = written.count()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        _annotate(ckpt, rnd + 1, n_edges, n_kept, wall_ms)
-        dropped = n_edges - n_kept
-        if rnd == start_round:
-            e.unpersist()
-        e = written
-        n_edges = n_kept
-        if dropped == 0:
-            return e
-    if n_edges is None:
-        # loop never executed: resume landed at round >= max_rounds.
-        # The checkpointed edge set is the state to return (round-4
-        # ADVICE: the old `if n_edges` gate silently returned an EMPTY
-        # frame here); one count decides empty-vs-budget-warning.
-        n_edges = e.count()
-    if n_edges > 0:
-        import warnings
 
+    # the kept-edge count is the written parquet's footer row count —
+    # no count job; a round that drops nothing is the fixpoint
+    try:
+        run = run_supersteps(
+            ckpt_dir, "truss",
+            mix_fingerprint(int(k), mix_fingerprint(n_edges, int(row["h"]))),
+            {"a", "b"},
+            e,
+            step,
+            lambda m, _: m["edges_kept"] in (0, m["edges_in"]),
+            max_rounds,
+            post=lambda _, rows, prev: {"edges_in": prev["edges_kept"], "edges_kept": rows},
+            carry={"edges_kept": n_edges},
+            resume=resume,
+        )
+    finally:
+        e.unpersist()
+    if not run.converged and run.metrics["edges_kept"] > 0:
         warnings.warn(
             f"k_truss: round budget ({max_rounds}) exhausted before the "
             "support fixpoint; the returned edge set may still shrink",
             stacklevel=2,
         )
-        return e.select("a", "b")
-    return spark.createDataFrame([], "a long, b long")
-
-
-def _annotate(
-    ckpt: CheckpointManager, step: int, n_in: int, n_kept: int, wall_ms: int
-) -> None:
-    import json
-    import os
-
-    p = ckpt.manifest_path(step)
-    with open(p) as fh:
-        m = json.load(fh)
-    m["metrics"] = {"edges_in": n_in, "edges_kept": n_kept}
-    m["wall_ms"] = wall_ms
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(m, fh)
-    os.rename(tmp, p)
+    return run.state.select("a", "b")

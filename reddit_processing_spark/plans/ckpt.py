@@ -12,9 +12,13 @@ Layout:
     {base}/{algo}/manifest_00004.json
 
 Atomicity on a filesystem: Spark's job commit protocol gives us
-_SUCCESS-gated directories; the manifest is written to a temp path
-and os.rename'd (atomic on POSIX). ``resume`` only trusts a step
-whose _SUCCESS, manifest, and footer row counts all agree.
+_SUCCESS-gated directories; the manifest — already carrying the
+step's wall time and metrics — is written to a temp path and
+os.rename'd (atomic on POSIX). That rename is the step's ONE commit
+(a step is one log record that includes its stats, as in Delta
+Lake's transaction log). ``resume`` only trusts a step whose
+_SUCCESS, manifest, and footer row counts all agree. The superstep
+loop that drives this lives in ``plans/superstep.py``.
 
 On a real cluster the same class targets an Iceberg table (snapshot
 per superstep) — the sandbox has no Iceberg runtime jar, so the
@@ -27,34 +31,34 @@ import glob
 import json
 import os
 import time
-from typing import Any
+import warnings
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 
 def mix_fingerprint(n: int, h: int) -> int:
-    """The one shared mixing formula behind every graph fingerprint:
-    row count golden-ratio-multiplied, xor'd with the row-hash xor,
-    masked positive. Callers that fold (n, h) into an existing
-    aggregate (PageRank's warm-up) MUST come through here so all four
-    algorithms' manifests stay format-compatible."""
+    """The one shared mixing formula behind every checkpoint
+    fingerprint: row count golden-ratio-multiplied, xor'd with the
+    row-hash xor, masked positive."""
     return (int(n) * 0x9E3779B97F4A7C15 ^ int(h)) & 0x7FFFFFFFFFFFFFFF
 
 
-def graph_fingerprint(edges: DataFrame, cols: tuple[str, ...] = ("src", "dst")) -> int:
-    """Order-insensitive fingerprint of an edge set: row count mixed
-    with bit_xor(xxhash64(cols)) — one scalar aggregate, no shuffle of
-    payload. Distinct edge rows make xor cancellation collisions
-    moot for practical purposes; equal fingerprints at resume time are
-    required, not proof of equality (the checkpoint state itself is
-    still row-count-validated)."""
+def count_hash(df: DataFrame, cols: tuple[str, ...], *extra) -> Any:
+    """One scalar aggregate, no shuffle of payload: row count ``n`` and
+    the order-insensitive row hash ``h`` = bit_xor(xxhash64(cols))
+    (overflow-free under ANSI mode), plus any ``extra`` aggregate
+    columns folded into the same job. Over distinct rows, xor
+    cancellation collisions are moot in practice; equal fingerprints at
+    resume are required, not proof of equality (the state itself is
+    still row-count-validated). Returns the Row."""
     from pyspark.sql import functions as F
 
-    row = edges.agg(
+    return df.agg(
         F.count("*").alias("n"),
         F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("h"),
+        *extra,
     ).collect()[0]
-    return mix_fingerprint(row["n"], row["h"])
 
 
 class CheckpointManager:
@@ -82,15 +86,23 @@ class CheckpointManager:
         self,
         df: DataFrame,
         step: int,
-        metrics: dict[str, Any] | None = None,
+        metrics: dict[str, Any] | Callable[[DataFrame, int], dict[str, Any]] | None = None,
+        t0: float | None = None,
     ) -> DataFrame:
-        """Write state for ``step``; returns the read-back DataFrame
-        (fresh lineage). Partition lineage comes from the committed
-        parquet footers — no extra Spark job."""
-        t0 = time.monotonic()
+        """Write state for ``step`` and commit its manifest; returns the
+        read-back DataFrame (fresh lineage). Partition lineage comes from
+        the committed parquet footers — no extra Spark job.
+
+        ``metrics`` may be a callable ``(read_back, rows) -> dict``: it
+        runs after the parquet commit and before the manifest, so
+        metrics that only exist once the write has run (Observations,
+        sums over the written state) land in the step's ONE manifest
+        commit. ``t0`` (a ``time.monotonic()`` reading) starts the
+        step's ``wall_ms``; by default it is the write's own start."""
+        t_write = time.monotonic()
         path = self.step_path(step)
         df.write.mode("overwrite").parquet(path)
-        wall_ms = int((time.monotonic() - t0) * 1000)
+        write_ms = int((time.monotonic() - t_write) * 1000)
 
         # Driver-serial footer reads were suspected as part of the
         # fixed per-superstep floor (round-2 VERDICT #8). MEASURED
@@ -119,36 +131,42 @@ class CheckpointManager:
             total_rows += md.num_rows
         footer_ms = int((time.monotonic() - t1) * 1000)
 
+        # read-back with the KNOWN schema: skips the per-superstep
+        # schema-discovery pass (file listing + footer sampling) that
+        # plain read.parquet runs — part of the fixed non-write floor
+        # measured in the write_ms/footer_ms decomposition.
+        written = df.sparkSession.read.schema(df.schema).parquet(path)
+        if callable(metrics):
+            metrics = metrics(written, total_rows)
         manifest = {
             "algo": self.algo,
             "superstep": step,
             "snapshot": path,
             "rows": total_rows,
             "partitions": partitions,
-            "wall_ms": wall_ms,
-            # decomposition of the fixed superstep floor (VERDICT #8):
-            # write_ms = the Spark write job (job scheduling + compute
-            # + parquet encode); footer_ms = the driver-serial footer
-            # scan (measured negligible locally — see comment above).
-            # The iterative algorithms later overwrite wall_ms with
-            # the FULL superstep wall, so floor ≈ wall_ms − write_ms.
-            "write_ms": wall_ms,
+            # the whole superstep (plan build, write, metric reads),
+            # decomposed: write_ms = the Spark write job (scheduling +
+            # compute + parquet encode); footer_ms = the driver-serial
+            # footer scan; the per-step floor ≈ wall_ms − write_ms.
+            "wall_ms": int((time.monotonic() - (t_write if t0 is None else t0)) * 1000),
+            "write_ms": write_ms,
             "footer_ms": footer_ms,
             "metrics": metrics or {},
         }
         if self.fingerprint is not None:
             manifest["fingerprint"] = int(self.fingerprint)
+        self._publish(step, manifest)
+        return written
+
+    def _publish(self, step: int, manifest: dict[str, Any]) -> None:
+        """The step's only commit: the manifest is written to a temp
+        path and renamed into place (atomic on POSIX), after its
+        parquet and every metric are known — a manifest that exists is
+        complete."""
         tmp = self.manifest_path(step) + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
         os.rename(tmp, self.manifest_path(step))
-
-        spark = df.sparkSession
-        # read-back with the KNOWN schema: skips the per-superstep
-        # schema-discovery pass (file listing + footer sampling) that
-        # plain read.parquet runs — part of the fixed non-write floor
-        # measured in the write_ms/footer_ms decomposition.
-        return spark.read.schema(df.schema).parquet(path)
 
     # ---- resume ----------------------------------------------------
     def manifests(self) -> list[dict[str, Any]]:
@@ -161,10 +179,11 @@ class CheckpointManager:
                 continue
         return out
 
-    def latest_valid_step(self) -> int | None:
-        """Highest superstep whose _SUCCESS + manifest + footer row
-        counts agree (and, when both sides carry one, whose input-graph
-        fingerprint matches); None when no valid checkpoint exists."""
+    def latest_valid(self) -> dict[str, Any] | None:
+        """Manifest of the highest superstep whose _SUCCESS + manifest +
+        footer row counts agree (and, when both sides carry one, whose
+        input-graph fingerprint matches); None when no valid checkpoint
+        exists."""
         import pyarrow.parquet as pq
 
         for m in reversed(self.manifests()):
@@ -174,8 +193,6 @@ class CheckpointManager:
                 and mfp is not None
                 and int(mfp) != int(self.fingerprint)
             ):
-                import warnings
-
                 warnings.warn(
                     f"{self.algo}: checkpoint at step {m['superstep']} was "
                     f"written for a DIFFERENT input graph (fingerprint "
@@ -195,7 +212,7 @@ class CheckpointManager:
             except OSError:
                 continue
             if rows == m["rows"]:
-                return int(m["superstep"])
+                return m
         return None
 
     def read(self, spark: SparkSession, step: int) -> DataFrame:

@@ -12,6 +12,7 @@ Config choices (SURVEY.md §3.2/§4):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -47,6 +48,33 @@ def _default_shuffle_partitions(master: str | None) -> int | None:
     if master.startswith("local[") and master.endswith("]") and master[6:-1].isdigit():
         n = int(master[6:-1])
     return max(8, 2 * n)
+
+
+def _driver_memory_from_meminfo(meminfo: str, share: float = 0.4) -> str | None:
+    """``share`` of MemTotal from a ``/proc/meminfo`` text, floored to
+    whole GiB (at least 1g); None when MemTotal is missing. In local
+    mode the driver heap is the heap of the whole engine, and G1 grows
+    it toward the cap long before it collects: a fixed 48g cap let the
+    test JVM grow past the RAM of a 16 GB host and get OOM-killed."""
+    m = re.search(r"^MemTotal:\s+(\d+)\s*kB", meminfo, re.MULTILINE)
+    if m is None:
+        return None
+    gib = int(int(m.group(1)) * share) // (1024 * 1024)
+    return f"{max(1, gib)}g"
+
+
+def _default_driver_memory(master: str | None) -> str | None:
+    """Host-sized heap for ``local`` masters; None (leave unset) for
+    launcher-owned and cluster masters, the same rule as
+    ``_default_shuffle_partitions``: the driver host's RAM says nothing
+    about what a cluster launcher has provisioned."""
+    if master is None or not master.startswith("local"):
+        return None
+    try:
+        with open("/proc/meminfo") as fh:
+            return _driver_memory_from_meminfo(fh.read())
+    except OSError:
+        return None
 
 
 def get_spark(
@@ -87,6 +115,7 @@ def get_spark(
         # explicit cluster masters both leave it unset; see
         # _default_shuffle_partitions.
         shuffle_partitions = _default_shuffle_partitions(master)
+    driver_memory = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(master)
 
     builder = SparkSession.builder
     if master is not None:
@@ -95,6 +124,8 @@ def get_spark(
         builder = builder.config(
             "spark.sql.shuffle.partitions", str(shuffle_partitions)
         )
+    if driver_memory is not None:
+        builder = builder.config("spark.driver.memory", driver_memory)
     builder = (
         builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
@@ -103,7 +134,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         # shuffle/spill scratch on RAM-backed tmpfs when available —
         # the sandbox analog of the NVMe/ramdisk local dirs every real
         # cluster uses; keeps benchmark walls from measuring virtio

@@ -64,7 +64,6 @@ def test_pagerank_kernels_and_salt_agree(spark, agg_edges, tmp_path):
         "csr": dict(kernel="csr", salt=1),
         "sql": dict(kernel="sql", salt=1),
         "csr_salted": dict(kernel="csr", salt=4),
-        "csr_pandas": dict(kernel="csr_pandas", salt=1),
     }.items():
         pr = PageRank(spark, agg_edges, num_partitions=8, **kw)
         try:
@@ -73,7 +72,7 @@ def test_pagerank_kernels_and_salt_agree(spark, agg_edges, tmp_path):
         finally:
             pr.unpersist()
     base = outs["csr"]
-    for name in ("sql", "csr_salted", "csr_pandas"):
+    for name in ("sql", "csr_salted"):
         assert outs[name].keys() == base.keys()
         assert max(abs(outs[name][v] - base[v]) for v in base) < 1e-9, name
 

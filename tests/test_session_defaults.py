@@ -8,7 +8,11 @@ from __future__ import annotations
 
 import os
 
-from reddit_processing_spark.session import _default_shuffle_partitions
+from reddit_processing_spark.session import (
+    _default_driver_memory,
+    _default_shuffle_partitions,
+    _driver_memory_from_meminfo,
+)
 
 
 def test_local_bracketed_master_uses_its_core_count():
@@ -31,3 +35,21 @@ def test_cluster_masters_get_no_default():
 
 def test_launcher_owned_master_gets_no_default():
     assert _default_shuffle_partitions(None) is None
+
+
+def test_driver_memory_is_40_percent_of_ram_floored_to_gib():
+    # a 15.7 GiB host (16,456,384 kB) gets 6g, not a fixed 48g that G1
+    # grows past physical RAM
+    assert _driver_memory_from_meminfo("MemTotal:       16456384 kB\n") == "6g"
+    assert _driver_memory_from_meminfo(
+        "MemTotal:       67108864 kB\nMemFree: 1 kB\n"
+    ) == "25g"
+    assert _driver_memory_from_meminfo("MemTotal: 1048576 kB\n") == "1g"  # floor of 1g
+    assert _driver_memory_from_meminfo("MemFree: 1 kB\n") is None
+
+
+def test_driver_memory_default_is_local_only():
+    assert _default_driver_memory("local[4]") is not None
+    assert _default_driver_memory("spark://host:7077") is None
+    assert _default_driver_memory("yarn") is None
+    assert _default_driver_memory(None) is None
